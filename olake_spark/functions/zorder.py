@@ -3,9 +3,10 @@
 The reference sorts write batches by a partition comparator so the writer
 holds one open file at a time (IcebergTableOperator.java:303-344, the
 "Clustered Writer way"). Our clustering generalizes that hook: compute a
-space-filling-curve key over (phash, w, h), ``repartitionByRange(zkey)`` (+
-salt on hot ranges), ``sortWithinPartitions(zkey)``, rewrite — per
-BASELINE.json north_star ("bit-interleaved keys computed in vectorized Arrow
+space-filling-curve key over (phash, w, h), cut each table partition into
+equal-frequency key ranges (+ salt on hot ranges), ``repartitionById`` on the
+range id, ``sortWithinPartitions(zkey)``, rewrite — per BASELINE.json
+north_star ("bit-interleaved keys computed in vectorized Arrow
 UDFs").
 
 All kernels are numpy-vectorized over whole Arrow batches; nothing here is

@@ -281,8 +281,7 @@ def _run_bulk(
 
     spark = table.spark
     # deterministic execution order: biggest bins first (stable across runs;
-    # also the order hash-partition collisions are least likely to pair two
-    # large bins when the partition count is widened below)
+    # bin i is written by task i, so the largest bins start first)
     todo = sorted(todo, key=lambda b: -b.total_bytes)
     rel_paths = {f.file_path for b in todo for f in b.files}
     pairs = [
@@ -320,13 +319,9 @@ def _run_bulk(
     per_file = max(1, target_bytes // avg_row)
 
     spec = table.spec
-    # `repartition(n, _bin_)` HASH-partitions: with exactly len(todo)
-    # partitions, birthday collisions routinely pack two bins into one task
-    # (a straggler) and leave ~1/e of tasks empty. 4× the partition count
-    # makes collisions rare and empty partitions are free — bin identity is
-    # carried by the partitionBy(_bin_) directory, not the task, so this is
-    # purely a load-balance knob
-    out = spec.apply(df).repartition(4 * len(todo), F.col("_bin_"))
+    # one task per bin: the bin id IS the shuffle partition id, so two bins
+    # never collide in one straggler task as they can under a hash shuffle
+    out = spec.apply(df).repartitionById(len(todo), F.col("_bin_").cast("int"))
     if sort_output and table.sort_order:
         # 'sort' strategy: compacted files keep the declared table sort
         # order; leading with the write's partition columns keeps the
@@ -497,7 +492,8 @@ def run_compaction(
 
     - **bulk** (default): ONE Spark job rewrites every bin — rows are tagged
       with their bin via `input_file_name()` + a broadcast file→bin map,
-      shuffled once on the bin id, and written `partitionBy(_bin_, …)`.
+      shuffled once with the bin id as the task id (`repartitionById`: one
+      task per bin), and written `partitionBy(_bin_, …)`.
       Commits stay per-bin (atomic, resumable). At any cluster size the whole
       compaction is a single shuffle of the small-file debt; driver overhead
       is O(1) jobs instead of O(bins) — the Amdahl fix that lets compaction

@@ -197,7 +197,8 @@ def backfill(
     seq = table.meta["last_sequence_number"] + 1
     codec = table.meta["properties"].get("write.parquet.compression-codec", "snappy")
     stage = os.path.join(table.root, "data", f".backfill-{uuid.uuid4().hex}")
-    out = spec.apply(df).repartition(max(len(todo), 1), F.col("_chunk_"))
+    # one task per pending chunk: the chunk index is the shuffle partition id
+    out = spec.apply(df).repartitionById(len(todo), F.col("_chunk_").cast("int"))
     if table.sort_order:
         # honor the declared table sort order (O3) in backfill-written files
         # too; leading with the write's partition columns keeps the parquet

@@ -3,6 +3,7 @@ every op preserves the exact row set; MERGE matches the applied-changes
 oracle; resume is idempotent; expire+orphans never touch live files."""
 
 import json
+import math
 import os
 
 import pytest
@@ -11,8 +12,8 @@ from pyspark.sql import functions as F
 from olake_spark import datagen
 from olake_spark.checkpoint import MaintenanceLog
 from olake_spark.icelite import PartitionField, PartitionSpec, Table
-from olake_spark.icelite.table import DATA, EQ_DELETES
-from olake_spark.operators.cluster import run_cluster_rewrite
+from olake_spark.icelite.table import DATA, EQ_DELETES, FileEntry
+from olake_spark.operators.cluster import _range_groups, run_cluster_rewrite
 from olake_spark.operators.compact import plan_compaction, run_compaction
 from olake_spark.operators.expire import run_expire
 from olake_spark.operators.manifests import rewrite_manifests
@@ -115,6 +116,120 @@ class TestClustering:
         after = overlap_score()
         # clustering by a phash-prefixed curve must tighten per-file phash spans
         assert after < before
+
+
+class TestClusterLayout:
+    """The rewrite writes k_b = ceil(bytes_b / target) key-contiguous files
+    per table partition, one task each. The fixture makes the curve key
+    monotone in phash: one image size (w, h constant) under Z-order, and a
+    uniform phash (xxhash64 of the id) with no hot prefix, so no coarse-key
+    tie straddles a cut. Slice contiguity then shows as phash spans."""
+
+    N = 400
+
+    @pytest.fixture()
+    def table4(self, spark, tmp_table_dir):
+        t = Table.create(
+            spark,
+            os.path.join(tmp_table_dir, "b4"),
+            datagen.IMAGES_SCHEMA,
+            PartitionSpec((PartitionField("image_id", "bucket", 4),)),
+            identifier_fields=("image_id",),
+        )
+        df = datagen.gen_images_df(spark, self.N, img_px=8).withColumn(
+            "phash", F.xxhash64("image_id")
+        )
+        datagen.fragmented_append(t, df, self.N, n_files=40)
+        return t
+
+    @staticmethod
+    def by_partition(t):
+        out = {}
+        for e in data_files(t):
+            out.setdefault(json.dumps(e.partition, sort_keys=True), []).append(e)
+        return out
+
+    def test_one_contiguous_file_per_slice(self, spark, table4):
+        t = table4
+        before = t.scan().select("image_id", "caption", "phash")
+        part_bytes = {
+            p: sum(e.file_size_bytes for e in es)
+            for p, es in self.by_partition(t).items()
+        }
+        assert len(part_bytes) == 4
+        # about 3.5 target-sized slices in the largest partition: 4 each
+        target = int(max(part_bytes.values()) / 3.5)
+        k = {p: math.ceil(b / target) for p, b in part_bytes.items()}
+        res = run_cluster_rewrite(t, "layout", curve="zorder", target_bytes=target)
+        assert res["files_out"] == sum(k.values())
+        assert row_sets_equal(before, t.scan().select("image_id", "caption", "phash"))
+
+        vals: dict[str, list[int]] = {}
+        for r in t.scan(columns=["phash"], with_partition_cols=True).collect():
+            p = json.dumps({"_p_image_id_bucket4": str(r["_p_image_id_bucket4"])})
+            vals.setdefault(p, []).append(r["phash"])
+        after = self.by_partition(t)
+        assert {p: len(es) for p, es in after.items()} == k
+        for p, files in after.items():
+            spans = sorted((e.mins["phash"], e.maxs["phash"]) for e in files)
+            # disjoint: every file starts after the previous one ends
+            assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
+            # a phash range holding 1/k_b of the partition's rows opens at
+            # most 2 of its files, wherever it sits
+            v = sorted(vals[p])
+            m = len(v) // k[p]
+            for j in range(len(v) - m + 1):
+                lo, hi = v[j], v[j + m - 1]
+                opened = [s for s in spans if s[1] >= lo and s[0] <= hi]
+                assert len(opened) <= 2, (p, lo, hi, spans)
+
+    def test_sampled_cuts_keep_rows_and_partitions(self, spark, table4):
+        t = table4
+        before = t.scan().select("image_id", "caption", "phash")
+        parts = set(self.by_partition(t))
+        target = int(max(
+            sum(e.file_size_bytes for e in es) for es in self.by_partition(t).values()
+        ) / 3.5)
+        # 20 sampled rows over 4 partitions: frac = 0.05, some partitions
+        # get one cut or none
+        res = run_cluster_rewrite(
+            t, "sampled", curve="zorder", target_bytes=target, boundary_sample_rows=20
+        )
+        assert res["rows"] == self.N
+        assert row_sets_equal(before, t.scan().select("image_id", "caption", "phash"))
+        assert set(self.by_partition(t)) == parts
+
+
+class TestRangeGroups:
+    """`_range_groups` on a hand-made sample: k_b from manifest bytes, cuts
+    at the sampled ranks where each slice starts."""
+
+    def sample(self, spark):
+        rows = [("0", i) for i in range(10)] + [("1", i) for i in range(30)]
+        return spark.createDataFrame(rows, "_pk0 string, _skey bigint")
+
+    @staticmethod
+    def entry(partition, size):
+        return FileEntry(DATA, "f", partition, 1, 1, size, {}, {}, {})
+
+    def test_cuts_from_manifest_bytes(self, spark):
+        entries = [self.entry({"p": "0"}, 900), self.entry({"p": "1"}, 2500)]
+        lookup, n = _range_groups(self.sample(spark), entries, ["p"], 1000)
+        assert n == 1 + 3
+        assert [tuple(r) for r in lookup.orderBy("_off").collect()] == [
+            ("0", 0, []), ("1", 1, [10, 20]),
+        ]
+
+    def test_old_layout_bytes_spread_by_sampled_rows(self, spark):
+        # a file written under an older spec has no current partition: its
+        # bytes follow the sampled rows (1:3), so the big partition still
+        # gets target-sized slices instead of one task
+        entries = [self.entry({"old": "x"}, 4000)]
+        lookup, n = _range_groups(self.sample(spark), entries, ["p"], 1000)
+        assert n == 1 + 3
+        assert [tuple(r) for r in lookup.orderBy("_off").collect()] == [
+            ("0", 0, []), ("1", 1, [10, 20]),
+        ]
 
 
 class TestMerge:

@@ -153,6 +153,56 @@ class TestOperatorPlans:
         assert "CartesianProduct" not in plan
 
 
+class TestShufflePlacement:
+    """The cluster rewrite and the bulk compaction place rows with a direct
+    shuffle (`repartitionById`): the group / bin id IS the task id. A hash
+    shuffle on the id lets two groups collide in one task — a straggler,
+    and for clustering one file spanning two key ranges."""
+
+    @pytest.fixture()
+    def write_plans(self, spark, tmp_table_dir, monkeypatch):
+        from pyspark.sql import DataFrameWriter
+
+        plans = []
+        orig = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            plans.append(plan_of(self._df))
+            return orig(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        t = Table.create(
+            spark, os.path.join(tmp_table_dir, "t"), datagen.IMAGES_SCHEMA,
+            PartitionSpec((PartitionField("image_id", "bucket", 2),)),
+            identifier_fields=("image_id",),
+        )
+        t.append(datagen.gen_images_df(spark, 40), max_records_per_file=4)
+        plans.clear()
+        return t, plans
+
+    @staticmethod
+    def assert_direct(plans):
+        shuffled = [p for p in plans if "Exchange" in p]
+        assert len(shuffled) == 1, plans
+        assert "direct_shuffle_partition_id" in shuffled[0]
+        assert "hashpartitioning" not in shuffled[0]
+
+    def test_cluster_rewrite_is_direct_shuffle(self, write_plans):
+        from olake_spark.operators.cluster import run_cluster_rewrite
+
+        t, plans = write_plans
+        run_cluster_rewrite(t, "pin", curve="hilbert", target_bytes=4096)
+        self.assert_direct(plans)
+
+    def test_bulk_compaction_is_direct_shuffle(self, write_plans):
+        from olake_spark.operators.compact import run_compaction
+
+        t, plans = write_plans
+        res = run_compaction(t, "pin", fill_ratio=1.0, target_bytes=1 << 30)
+        assert res["mode"] == "bulk" and res["bins_executed"] == 2
+        self.assert_direct(plans)
+
+
 class TestRowLevelOpPlans:
     def test_pos_delete_scan_broadcasts_marks(self, spark, small_table):
         """A scan under positional deletes applies the (file_path, pos)
