@@ -65,7 +65,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from olake_spark.icelite.table import DATA, Table
+from olake_spark.icelite.table import DATA, Table, uri_path
 
 _ALGO = "xxhash64-km-v1"  # Kirsch-Mitzenmacher double hashing over xxhash64
 _H2_TAG = "olake-bloom-h2"  # second hash = xxhash64(tag, col): independent seed chain
@@ -211,12 +211,7 @@ def build_bloom_index(
         hashed = (
             table.spark.read.schema(table.schema)
             .parquet(*params.keys())
-            .select(
-                F.regexp_replace(
-                    F.input_file_name(), "^file:/+", "/"
-                ).alias("f"),
-                F.col(column),
-            )
+            .select(uri_path(F.input_file_name()).alias("f"), F.col(column))
             .filter(F.col(column).isNotNull())
             .select("f", *_hash_cols(column))
         )

@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .avro import write_ocf
-from .table import DATA, EQ_DELETES, POS_DELETES, FileEntry, Table
+from .table import DATA, EQ_DELETES, POS_DELETES, FileEntry, Table, uri_path
 
 _FMT = "PARQUET"
 
@@ -829,8 +829,7 @@ def open_iceberg(
     def _tag(d: DataFrame) -> DataFrame:
         if need_pos:
             return d.withColumn(
-                "_file_path",
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
+                "_file_path", uri_path(F.col("_metadata.file_path"))
             ).withColumn("_pos", F.col("_metadata.row_index"))
         return d
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from olake_spark.icelite.table import DATA, Table
+from olake_spark.icelite.table import DATA, Table, uri_path
 
 
 def _snapshot_manifest_pairs(table: Table) -> list[tuple[int, str]]:
@@ -61,10 +61,7 @@ def _tagged_entries(table: Table, pairs: list[tuple[int, str]]) -> DataFrame:
         .parquet(*[table._abs(m) for m in distinct])
         .withColumn(
             "manifest_path",
-            F.expr(
-                f"substring(regexp_replace(_metadata.file_path, "
-                f"'^file:/+', '/'), {rel_start}, 1000000)"
-            ),
+            F.substring(uri_path(F.col("_metadata.file_path")), rel_start, 1000000),
         )
     )
     pairs_df = table.spark.createDataFrame(pairs, _PAIRS_SCHEMA)

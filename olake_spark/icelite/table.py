@@ -40,7 +40,7 @@ from typing import Any, Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, LongType,
                                StringType, StructField, StructType)
@@ -57,6 +57,10 @@ EQ_DELETES = 2
 # estimated under this many rows ("broadcast-or-sort-merge join against
 # equality-delete reconciliation", BASELINE.json north_star)
 BROADCAST_DELETE_ROWS = 2_000_000
+
+# units (compaction bins, backfill chunks) committed per snapshot by the
+# grouped writers: one snapshot and one maintenance-log append per group
+COMMIT_GROUP = 16
 
 _MANIFEST_SCHEMA = pa.schema(
     [
@@ -571,10 +575,7 @@ class Table:
             # evaluated at the scan, before any join/union, where
             # input_file_name() / _metadata are guaranteed to resolve
             if with_input_file:
-                d = d.withColumn(
-                    "_input_file",
-                    F.regexp_replace(F.input_file_name(), "^file:/+", "/"),
-                )
+                d = d.withColumn("_input_file", uri_path(F.input_file_name()))
             if need_pos:
                 # parquet hidden metadata columns: stable row identity
                 # (file, row-ordinal) with zero read amplification — the
@@ -584,9 +585,7 @@ class Table:
                 # manifested by absolute path — the tag must match the
                 # manifest key either way: root-relative for owned files,
                 # absolute for imported ones.
-                full = F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                )
+                full = uri_path(F.col("_metadata.file_path"))
                 d = d.withColumn(
                     "_file_path",
                     F.when(
@@ -989,17 +988,24 @@ class Table:
         seq: int,
         max_records_per_file: int | None = None,
         sort_within_by: list[str] | None = None,
-    ) -> list[FileEntry]:
+        group_col: str | None = None,
+    ) -> list[FileEntry] | dict[int, list[FileEntry]]:
         """Write data files into <root>/data/ and return manifest entries.
 
         Partition columns are materialized and hive-encoded into directory
         paths (Spark `partitionBy`), mirroring the reference's partition-path
         routing (parquet.go:310-368); files are then promoted from the staging
         dir with unique names — rename, not copy.
+
+        `group_col` names an integer column that tags each row with its unit
+        of commit (a compaction bin, a backfill chunk). It leads the
+        partition directories, and the entries come back as
+        {group id: entries} so the caller can commit groups separately.
         """
         spec = self.spec
         stage = os.path.join(self.root, "data", f".stage-{uuid.uuid4().hex}")
         out = spec.apply(df)
+        lead = [group_col] if group_col else []
         if sort_within_by is None:
             # honor the declared table sort order (O3) by default; callers
             # with their own layout (cluster rewrite) pass [] to opt out
@@ -1008,7 +1014,7 @@ class Table:
             # lead with the partition columns: the partitioned file writer
             # requires rows ordered by partition expression — satisfying it
             # here means no writer-side re-sort erases the within-file order
-            out = out.sortWithinPartitions(*spec.names, *sort_within_by)
+            out = out.sortWithinPartitions(*lead, *spec.names, *sort_within_by)
         # image payloads are already entropy-coded — recompressing them in
         # parquet burns CPU for ~0% ratio; tables opt in via the property
         codec = self.meta["properties"].get(
@@ -1017,57 +1023,71 @@ class Table:
         w = out.write.mode("overwrite").option("compression", codec)
         if max_records_per_file:
             w = w.option("maxRecordsPerFile", max_records_per_file)
-        if spec.fields:
-            w = w.partitionBy(*spec.names)
+        if lead or spec.fields:
+            w = w.partitionBy(*lead, *spec.names)
         try:
             w.parquet(stage)
         except Exception:
             self.io.rmtree(stage)
             raise
+        groups = self._publish_stage(stage, seq, DATA, group_col)
+        return groups if group_col else groups.get(None, [])
 
-        entries: list[FileEntry] = []
-        moved: list[tuple[str, str, dict]] = []  # (abs_final, rel_final, partition)
+    def _publish_stage(
+        self,
+        stage: str,
+        seq: int,
+        content: int,
+        group_col: str | None = None,
+    ) -> dict[int | None, list[FileEntry]]:
+        """Turn a finished Spark write into manifest entries: the one place
+        that promotes staged files and harvests their footer stats.
+
+        Data files keep their hive partition directories under data/; delete
+        files land under deletes/. Each file gets a unique `<seq>-<uuid>`
+        name, and the whole batch is published with ONE bulk FileIO call.
+        Empty files are deleted, not committed (the reference deletes empty
+        files, parquet.go:210-283). Entries are keyed by the value of the
+        leading `group_col` directory, or None without one.
+        """
+        base = os.path.join(self.root, "data" if content == DATA else "deletes")
+        moved: list[tuple[int | None, str, dict]] = []  # (group, dest, partition)
         pairs: list[tuple[str, str]] = []
-        dest_dirs: set[str] = set()
         for src in self.io.walk_files(stage):
-            name = os.path.basename(src)
-            if not name.endswith(".parquet"):
+            if not src.endswith(".parquet"):
                 continue
             rel_dir = os.path.relpath(os.path.dirname(src), stage)
-            partition = _parse_partition(rel_dir)
-            final_name = f"{seq:06d}-{uuid.uuid4().hex}.parquet"
-            dest_dir = (
-                os.path.join(self.root, "data", rel_dir)
-                if rel_dir != "."
-                else os.path.join(self.root, "data")
+            comps = [] if rel_dir == "." else rel_dir.split(os.sep)
+            group = int(comps.pop(0).split("=", 1)[1]) if group_col else None
+            dest = os.path.join(
+                base, *comps, f"{seq:06d}-{uuid.uuid4().hex}.parquet"
             )
-            dest_dirs.add(dest_dir)
-            dest = os.path.join(dest_dir, final_name)
             pairs.append((src, dest))
-            moved.append((dest, os.path.relpath(dest, self.root), partition))
-        for d in sorted(dest_dirs):
+            moved.append((group, dest, _parse_partition(os.sep.join(comps))))
+        # base holds the stage, so only partition directories can be missing
+        for d in sorted({os.path.dirname(dst) for _, dst in pairs} - {base}):
             self.io.makedirs(d)
         self._promote(pairs, stage)
         self.io.rmtree(stage)
 
-        stats = collect_file_stats(self.spark, [m[0] for m in moved])
+        stats = collect_file_stats(self.spark, [m[1] for m in moved])
+        groups: dict[int | None, list[FileEntry]] = {}
         empties: list[str] = []
-        for abspath, rel, partition in moved:
-            st = stats[abspath]
+        for group, dest, partition in moved:
+            st = stats[dest]
             if st["record_count"] == 0:
-                # reference deletes empty files, parquet.go:210-283
-                empties.append(abspath)
+                empties.append(dest)
                 continue
-            entries.append(
+            groups.setdefault(group, []).append(
                 FileEntry(
-                    DATA, rel, partition, seq,
+                    content, os.path.relpath(dest, self.root), partition, seq,
                     st["record_count"], st["file_size_bytes"],
                     st["mins"], st["maxs"], st["null_counts"],
                 )
             )
         if empties:
             self.io.remove_many(empties)
-        return entries
+        return groups
 
     def _promote(self, pairs: list[tuple[str, str]], stage: str) -> None:
         """Publish staged files with ONE bulk FileIO call — O(1) driver calls
@@ -1093,7 +1113,7 @@ class Table:
         keys_df.select(*self.identifier_fields).withColumn(
             "_delete_seq", F.lit(seq)
         ).write.mode("overwrite").parquet(stage)
-        return self._publish_delete_stage(stage, seq, EQ_DELETES)
+        return self._publish_stage(stage, seq, EQ_DELETES).get(None, [])
 
     def _write_pos_delete_files(
         self, hits: DataFrame, seq: int, n_files: int | None = None
@@ -1116,41 +1136,7 @@ class Table:
             .write.mode("overwrite")
             .parquet(stage)
         )
-        return self._publish_delete_stage(stage, seq, POS_DELETES)
-
-    def _publish_delete_stage(
-        self, stage: str, seq: int, content: int
-    ) -> list[FileEntry]:
-        pairs = [
-            (
-                os.path.join(stage, name),
-                os.path.join(
-                    self.root, "deletes", f"{seq:06d}-{uuid.uuid4().hex}.parquet"
-                ),
-            )
-            for name in self.io.list_dir(stage)
-            if name.endswith(".parquet")
-        ]
-        self._promote(pairs, stage)
-        self.io.rmtree(stage)
-        entries: list[FileEntry] = []
-        stats = collect_file_stats(self.spark, [dst for _, dst in pairs])
-        empties: list[str] = []
-        for _, dest in pairs:
-            st = stats[dest]
-            if st["record_count"] == 0:
-                empties.append(dest)
-                continue
-            entries.append(
-                FileEntry(
-                    content, os.path.relpath(dest, self.root), {}, seq,
-                    st["record_count"], st["file_size_bytes"],
-                    st["mins"], st["maxs"], st["null_counts"],
-                )
-            )
-        if empties:
-            self.io.remove_many(empties)
-        return entries
+        return self._publish_stage(stage, seq, POS_DELETES).get(None, [])
 
     def _new_manifest(self, entries: list[FileEntry]) -> str:
         rel = os.path.join("metadata", "manifests", f"mf-{uuid.uuid4().hex}.parquet")
@@ -2571,6 +2557,16 @@ def _list_files_spark(
         n = max(1, min(len(units), sc.defaultParallelism * 2))
         out += sc.parallelize(units, n).flatMap(walk).collect()
     return out
+
+
+def uri_path(uri: Column) -> Column:
+    """Local path of the file URI Spark reports for a row
+    (`input_file_name()`, `_metadata.file_path`): the scheme is stripped and
+    percent-escapes decoded, so a root holding a space, `%` or non-ASCII
+    text compares equal to the paths the manifests store. `+` is escaped
+    first: url_decode reads it as a space, but in a URI path it is literal."""
+    path = F.regexp_replace(uri, "^file:/+", "/")
+    return F.url_decode(F.regexp_replace(path, "\\+", "%2B"))
 
 
 def _parse_partition(rel_dir: str) -> dict[str, str]:

@@ -8,15 +8,17 @@ ingest inevitably leaves small files. This operator:
    `bytes` column is never read during planning;
 2. groups undersized files (size < fill_ratio × target) per partition with
    first-fit-decreasing into bins summing to ≈ target;
-3. executes each bin as one rewrite: scan exactly those files (equality
-   deletes applied → rewrite also *purges* deletes), write ≈target-sized
-   files, atomically swap via a rewrite snapshot;
+3. rewrites every pending bin in ONE Spark job: scan exactly the planned
+   files (equality deletes applied → rewrite also *purges* deletes), one
+   shuffle task per bin, ≈target-sized output files written through
+   `Table._stage_write`; then swaps bins in atomic rewrite snapshots,
+   COMMIT_GROUP bins per snapshot;
 4. logs per-chunk lineage to the maintenance log; a rerun with the same
    job_id skips bins already logged done (idempotent resume — the analogue of
    state.RemoveChunk, types/state.go:187-230).
 
-Each bin reads only its own files — at 10^12-image scale no task ever holds
-more than ~target bytes of encoded pixels, and bins are independent.
+Each task holds one bin — at 10^12-image scale no task ever holds more than
+~target bytes of encoded pixels.
 """
 
 from __future__ import annotations
@@ -27,8 +29,9 @@ import math
 from dataclasses import dataclass, field
 
 from olake_spark.checkpoint import MaintenanceLog
-from olake_spark.icelite.table import (DATA, EQ_DELETES, POS_DELETES,
-                                       CommitConflict, FileEntry, Table)
+from olake_spark.icelite.table import (COMMIT_GROUP, DATA, EQ_DELETES,
+                                       POS_DELETES, CommitConflict, FileEntry,
+                                       Table)
 
 DEFAULT_TARGET = 512 * 1024 * 1024
 
@@ -265,19 +268,13 @@ def _run_bulk(
     todo: list[Bin],
     target_bytes: int,
     pin_snapshot: int,
-    snap_before: int,
-    verify: bool = False,
-    pinned_delete_paths: set[str] | None = None,
-    sort_output: bool = False,
+    verify: bool,
+    pinned_delete_paths: set[str],
+    sort_output: bool,
 ) -> dict:
-    """One-job executor: see run_compaction (mode='bulk')."""
-    import os
-    import uuid
-
+    """Rewrite `todo` in ONE Spark job, then commit it COMMIT_GROUP bins per
+    snapshot. Returns the executed bin, row and byte counts."""
     from pyspark.sql import functions as F
-
-    from olake_spark.icelite.stats import collect_file_stats
-    from olake_spark.icelite.table import _parse_partition
 
     spark = table.spark
     # deterministic execution order: biggest bins first (stable across runs;
@@ -318,89 +315,25 @@ def _run_bulk(
     avg_row = max(1, total_bytes // max(1, total_rows))
     per_file = max(1, target_bytes // avg_row)
 
-    spec = table.spec
     # one task per bin: the bin id IS the shuffle partition id, so two bins
     # never collide in one straggler task as they can under a hash shuffle
-    out = spec.apply(df).repartitionById(len(todo), F.col("_bin_").cast("int"))
-    if sort_output and table.sort_order:
-        # 'sort' strategy: compacted files keep the declared table sort
-        # order; leading with the write's partition columns keeps the
-        # parquet writer on its no-resort path (same contract as
-        # _stage_write). Within-file order does not affect file-level
-        # min/max, so clustered layouts keep their pruning power either way.
-        out = out.sortWithinPartitions("_bin_", *spec.names, *table.sort_order)
+    out = df.repartitionById(len(todo), F.col("_bin_").cast("int"))
     seq = table.meta["last_sequence_number"] + 1
-    stage = os.path.join(table.root, "data", f".bulk-{uuid.uuid4().hex}")
-    codec = table.meta["properties"].get(
-        "write.parquet.compression-codec", "snappy"
+    # binpack ([]): no re-sort; 'sort' strategy (None): the declared table
+    # sort order. Within-file order does not affect file-level min/max, so
+    # clustered layouts keep their pruning power either way.
+    per_bin = table._stage_write(
+        out, seq, max_records_per_file=per_file,
+        sort_within_by=None if sort_output else [], group_col="_bin_",
     )
-    try:
-        (
-            out.write.mode("overwrite")
-            .option("maxRecordsPerFile", per_file)
-            .option("compression", codec)
-            .partitionBy("_bin_", *spec.names)
-            .parquet(stage)
-        )
-    except Exception:
-        table.io.rmtree(stage)
-        raise
-
-    # promote: <stage>/_bin_=k/<partition dirs>/file → data/<partition>/file
-    # — planned on the driver, published with ONE bulk FileIO call
-    moved: list[tuple[int, str, str, dict]] = []  # (bin, abs, rel, partition)
-    pairs: list[tuple[str, str]] = []
-    dest_dirs: set[str] = set()
-    for src in table.io.walk_files(stage):
-        name = os.path.basename(src)
-        if not name.endswith(".parquet"):
-            continue
-        rel_dir = os.path.relpath(os.path.dirname(src), stage)
-        comps = [] if rel_dir == "." else rel_dir.split(os.sep)
-        if not comps or not comps[0].startswith("_bin_="):
-            continue
-        bin_idx = int(comps[0].split("=", 1)[1])
-        partition = _parse_partition(os.path.join(*comps[1:]) if comps[1:] else ".")
-        dest_dir = (
-            os.path.join(table.root, "data", *comps[1:])
-            if comps[1:]
-            else os.path.join(table.root, "data")
-        )
-        dest_dirs.add(dest_dir)
-        dest = os.path.join(dest_dir, f"{seq:06d}-{uuid.uuid4().hex}.parquet")
-        pairs.append((src, dest))
-        moved.append((bin_idx, dest, os.path.relpath(dest, table.root), partition))
-    for d in sorted(dest_dirs):
-        table.io.makedirs(d)
-    table._promote(pairs, stage)
-    table.io.rmtree(stage)
-
-    stats = collect_file_stats(spark, [m[1] for m in moved])
-    per_bin: dict[int, list[FileEntry]] = {}
-    empties: list[str] = []
-    for bin_idx, abspath, rel, partition in moved:
-        st = stats[abspath]
-        if st["record_count"] == 0:
-            empties.append(abspath)
-            continue
-        per_bin.setdefault(bin_idx, []).append(
-            FileEntry(
-                DATA, rel, partition, seq,
-                st["record_count"], st["file_size_bytes"],
-                st["mins"], st["maxs"], st["null_counts"],
-            )
-        )
-    if empties:
-        table.io.remove_many(empties)
 
     # commit in groups: one snapshot swaps a group of bins atomically, one
     # batched log append records their lineage. Resume granularity stays
     # bin-level (done chunk ids); an interrupted group redoes as a unit.
-    GROUP = 16
     executed = 0
     rows_out = bytes_out = 0
-    for g in range(0, len(todo), GROUP):
-        group = list(enumerate(todo))[g : g + GROUP]
+    for g in range(0, len(todo), COMMIT_GROUP):
+        group = list(enumerate(todo))[g : g + COMMIT_GROUP]
         removed = {f.file_path for _, b in group for f in b.files}
         added = [e for i, _ in group for e in per_bin.get(i, [])]
         try:
@@ -444,17 +377,15 @@ def _run_bulk(
                      "bytes_out": sum(
                          e.file_size_bytes for e in per_bin.get(i, [])
                      ),
-                     "snapshot_before": snap_before,
+                     "snapshot_before": pin_snapshot,
                      "snapshot_after": snap.get("snapshot_id")}
                     for i, b in group
                 ],
             )
     return {
-        "bins_planned": len(todo),
         "bins_executed": executed,
         "rows_rewritten": rows_out,
         "bytes_out": bytes_out,
-        "mode": "bulk",
     }
 
 
@@ -466,8 +397,6 @@ def run_compaction(
     fill_ratio: float = 0.5,
     max_bins: int | None = None,
     stop_after_bins: int | None = None,
-    max_concurrency: int | None = None,
-    mode: str = "bulk",  # or "bins"
     verify: bool = False,
     sort: bool | None = None,
     predicates: list[tuple[str, str, object]] | None = None,
@@ -480,7 +409,7 @@ def run_compaction(
     whole; files outside the scope are untouched, byte for byte.
 
     `sort`: binpack-vs-sort strategy, exactly Iceberg's RewriteDataFiles
-    split — the DEFAULT is binpack (coalesce only; re-sorting every fat
+    split — the DEFAULT is binpack (merge, no re-sort; re-sorting every fat
     image row through the shuffle sorter costs ~20-40% of rewrite wall and
     Iceberg's default strategy skips it too), so compaction does NOT
     maintain the declared table sort order unless asked: pass sort=True or
@@ -488,24 +417,18 @@ def run_compaction(
     always honor the declared order (O3); only the rewrite strategy is a
     choice.
 
-    Two executors:
-
-    - **bulk** (default): ONE Spark job rewrites every bin — rows are tagged
-      with their bin via `input_file_name()` + a broadcast file→bin map,
-      shuffled once with the bin id as the task id (`repartitionById`: one
-      task per bin), and written `partitionBy(_bin_, …)`.
-      Commits stay per-bin (atomic, resumable). At any cluster size the whole
-      compaction is a single shuffle of the small-file debt; driver overhead
-      is O(1) jobs instead of O(bins) — the Amdahl fix that lets compaction
-      actually scale with executors.
-    - **bins**: thread-per-bin (the reference's chunk-pool shape,
-      constants/constants.go:7): each bin is a shuffle-free
-      scan→coalesce(1)→write job; up to `max_concurrency` in flight. Used
-      for `stop_after_bins` resume tests and when incremental progress
-      matters more than wall-clock.
+    Execution: ONE Spark job rewrites every pending bin — rows are tagged
+    with their bin via `input_file_name()` + a broadcast file→bin map,
+    shuffled once with the bin id as the task id (`repartitionById`: one
+    task per bin), and written by `Table._stage_write` grouped by bin.
+    Commits go COMMIT_GROUP bins per snapshot (atomic, resumable per bin).
+    Driver overhead is O(1) jobs instead of O(bins), so compaction scales
+    with executors; a one-bin plan pays one shuffle of at most `target`
+    bytes.
 
     `stop_after_bins` exists for resume tests: simulate an interruption after
-    k committed bins.
+    k committed bins. `bins_planned` counts the bins of the (last) plan,
+    including ones a log marks done.
     """
     table.refresh()
     if sort is None:
@@ -517,162 +440,66 @@ def run_compaction(
         target_bytes = int(
             table.meta["properties"].get("write.target-file-size-bytes", DEFAULT_TARGET)
         )
-    if max_concurrency is None:
-        # single-file bins run as one task each — keep enough bins in flight
-        # to cover the cluster (thread-per-chunk, scaled to cores instead of
-        # the reference's fixed 3, constants/constants.go:7)
-        max_concurrency = min(64, table.spark.sparkContext.defaultParallelism)
-    snap_before = table.current_snapshot_id
-    bins = plan_compaction(table, target_bytes, fill_ratio, predicates=predicates)
-    if max_bins:
-        bins = bins[:max_bins]
 
-    done: set[str] = set()
-    if log is not None:
-        done = log.done_chunk_ids(job_id)
-        log.log_planned(
-            job_id, "compact",
-            [{"chunk_id": b.chunk_id, "partition": b.partition_json,
-              "rows": b.total_rows, "bytes_in": b.total_bytes} for b in bins
-             if b.chunk_id not in done],
-        )
-
-    pin_snapshot = table.current_snapshot_id
-    # validateNoNewDeleteFiles guard: rewrites re-seq their rows, so a delete
-    # that commits between this pin and our commit would silently miss them —
-    # the commit must conflict instead (ADVICE round 1; Iceberg's
-    # RewriteFiles.validateNoNewDeleteFiles semantics)
-    pinned_dels = {
-        e.file_path
-        for e in table.entries(pin_snapshot)
-        if e.content != DATA
-    }
-    skipped = sum(1 for b in bins if b.chunk_id in done)
-    todo = [b for b in bins if b.chunk_id not in done]
-    if stop_after_bins is not None:
-        todo = todo[:stop_after_bins]
-
-    if mode == "bulk" and len(todo) > 1 and stop_after_bins is None:
-        # a concurrent equality-delete commit can CommitConflict the per-group
-        # commit loop midway: committed groups stand, _run_bulk has already
-        # deleted the uncommitted groups' outputs, and we re-plan the rest
-        # from fresh metadata (which now includes the conflicting deletes, so
-        # the redone bins read the post-delete row state)
-        executed_total = rows_total = bytes_total = 0
-        for attempt in range(3):
-            try:
-                res = _run_bulk(
-                    table, job_id, log, todo, target_bytes, pin_snapshot,
-                    snap_before, verify=verify,
-                    pinned_delete_paths=pinned_dels, sort_output=sort,
-                )
-            except CommitConflict as ce:
-                p = getattr(ce, "partial", (0, 0, 0))
-                executed_total += p[0]
-                rows_total += p[1]
-                bytes_total += p[2]
-                if attempt == 2:
-                    raise
-                table.refresh()
-                # re-plan against the post-conflict state: fresh pin + delete
-                # set, the caller's max_bins cap re-applied, lineage log
-                # re-primed (planned rows + the snapshot the redo reads)
-                pin_snapshot = table.current_snapshot_id
-                snap_before = pin_snapshot
-                pinned_dels = {
-                    e.file_path
-                    for e in table.entries(pin_snapshot)
-                    if e.content != DATA
-                }
-                bins = plan_compaction(
-                    table, target_bytes, fill_ratio, predicates=predicates
-                )
-                if max_bins:
-                    bins = bins[:max_bins]
-                done = log.done_chunk_ids(job_id) if log is not None else set()
-                todo = [b for b in bins if b.chunk_id not in done]
-                if log is not None and todo:
-                    log.log_planned(
-                        job_id, "compact",
-                        [{"chunk_id": b.chunk_id, "partition": b.partition_json,
-                          "rows": b.total_rows, "bytes_in": b.total_bytes}
-                         for b in todo],
-                    )
-                if not todo:
-                    res = {"bins_planned": 0, "bins_executed": 0,
-                           "rows_rewritten": 0, "bytes_out": 0, "mode": "bulk"}
-                    break
-                continue
-            break
-        executed_total += res["bins_executed"]
-        rows_total += res["rows_rewritten"]
-        bytes_total += res["bytes_out"]
-        res.update(
-            bins_executed=executed_total, rows_rewritten=rows_total,
-            bytes_out=bytes_total, bins_skipped=skipped,
-        )
-        res["delete_files_purged"] = (
-            purge_dead_deletes(table) if res["bins_executed"] else 0
-        )
-        return res
-
-    def exec_bin(b: Bin) -> tuple[int, int]:
-        paths = {f.file_path for f in b.files}
-        df = table.scan(snapshot_id=pin_snapshot, file_filter=paths)
-        if verify:
-            from olake_spark.verify import inline_pixel_check
-
-            df = inline_pixel_check(df)
-        # rows per output file sized from observed bytes/row of this bin
-        avg_row = max(1, b.total_bytes // max(1, b.total_rows))
-        per_file = max(1, target_bytes // avg_row)
-        n_out = max(1, math.ceil(b.total_bytes / target_bytes))
-        # a bin is ≤ target by construction → one output file, and coalesce
-        # merges the input splits without a shuffle (bin-level parallelism
-        # comes from running bins concurrently, like the reference's
-        # thread-per-chunk writers, destination/writers.go:50-89)
-        out = df.coalesce(1) if n_out == 1 else df.repartition(n_out)
-        seq = table.meta["last_sequence_number"] + 1
-        added = table._stage_write(
-            out, seq, max_records_per_file=per_file,
-            sort_within_by=None if sort else [],  # binpack: no re-sort
-        )
-        snap = table.rewrite_files(
-            paths, added, op="compact",
-            extra_summary={"job_id": job_id, "chunk_id": b.chunk_id},
-            seq_used=seq,
-            known_delete_paths=pinned_dels,
-        )
-        if log is not None:
-            log.log_done(
+    # a concurrent equality-delete commit can CommitConflict the per-group
+    # commit loop midway: committed groups stand, _run_bulk has already
+    # deleted the uncommitted groups' outputs, and we re-plan the rest from
+    # fresh metadata (which now includes the conflicting deletes, so the
+    # redone bins read the post-delete row state)
+    executed = rows_out = bytes_out = 0
+    for attempt in range(3):
+        # the snapshot the rewrite reads; validateNoNewDeleteFiles guard:
+        # rewrites re-seq their rows, so a delete that commits between this
+        # pin and our commit would silently miss them — the commit must
+        # conflict instead (ADVICE round 1; Iceberg's
+        # RewriteFiles.validateNoNewDeleteFiles semantics)
+        pin_snapshot = table.current_snapshot_id
+        bins = plan_compaction(table, target_bytes, fill_ratio, predicates=predicates)
+        if max_bins:
+            bins = bins[:max_bins]
+        done = log.done_chunk_ids(job_id) if log is not None else set()
+        todo = [b for b in bins if b.chunk_id not in done]
+        if attempt == 0:
+            skipped = len(bins) - len(todo)
+        if log is not None and todo:
+            log.log_planned(
                 job_id, "compact",
-                {"chunk_id": b.chunk_id, "partition": b.partition_json,
-                 "rows": b.total_rows, "bytes_in": b.total_bytes,
-                 "bytes_out": sum(e.file_size_bytes for e in added),
-                 "snapshot_before": snap_before,
-                 "snapshot_after": snap.get("snapshot_id")},
+                [{"chunk_id": b.chunk_id, "partition": b.partition_json,
+                  "rows": b.total_rows, "bytes_in": b.total_bytes}
+                 for b in todo],
             )
-        return (
-            sum(e.record_count for e in added),
-            sum(e.file_size_bytes for e in added),
-        )
-
-    executed = 0
-    rows_out = bytes_out = 0
-    if todo:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(max_concurrency, len(todo))) as ex:
-            for r, by in ex.map(exec_bin, todo):
-                executed += 1
-                rows_out += r
-                bytes_out += by
-    purged = purge_dead_deletes(table) if executed else 0
+        if stop_after_bins is not None:
+            todo = todo[: stop_after_bins - executed]
+        if not todo:
+            break
+        pinned_dels = {
+            e.file_path
+            for e in table.entries(pin_snapshot)
+            if e.content != DATA
+        }
+        try:
+            res = _run_bulk(
+                table, job_id, log, todo, target_bytes, pin_snapshot,
+                verify, pinned_dels, sort,
+            )
+        except CommitConflict as ce:
+            p = getattr(ce, "partial", (0, 0, 0))
+            executed += p[0]
+            rows_out += p[1]
+            bytes_out += p[2]
+            if attempt == 2:
+                raise
+            table.refresh()
+            continue
+        executed += res["bins_executed"]
+        rows_out += res["rows_rewritten"]
+        bytes_out += res["bytes_out"]
+        break
     return {
         "bins_planned": len(bins),
         "bins_executed": executed,
         "bins_skipped": skipped,
         "rows_rewritten": rows_out,
         "bytes_out": bytes_out,
-        "delete_files_purged": purged,
+        "delete_files_purged": purge_dead_deletes(table) if executed else 0,
     }

@@ -19,14 +19,12 @@ apply, with chunk-granular resumable state (SURVEY.md §3.1). Here:
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olake_spark.checkpoint import MaintenanceLog
-from olake_spark.icelite.stats import collect_file_stats
-from olake_spark.icelite.table import DATA, FileEntry, Table, _parse_partition
+from olake_spark.icelite.table import COMMIT_GROUP, Table
 
 
 def plan_chunks(
@@ -192,80 +190,18 @@ def backfill(
     # out BEFORE the write (resume re-reads the source but rewrites nothing)
     df = route_to_chunks(source, key_cols, todo)
 
-    spec = table.spec
     table.refresh()
     seq = table.meta["last_sequence_number"] + 1
-    codec = table.meta["properties"].get("write.parquet.compression-codec", "snappy")
-    stage = os.path.join(table.root, "data", f".backfill-{uuid.uuid4().hex}")
     # one task per pending chunk: the chunk index is the shuffle partition id
-    out = spec.apply(df).repartitionById(len(todo), F.col("_chunk_").cast("int"))
-    if table.sort_order:
-        # honor the declared table sort order (O3) in backfill-written files
-        # too; leading with the write's partition columns keeps the parquet
-        # writer on its no-resort path (same contract as Table._stage_write)
-        out = out.sortWithinPartitions("_chunk_", *spec.names, *table.sort_order)
-    w = (
-        out.write.mode("overwrite")
-        .option("compression", codec)
+    per_chunk = table._stage_write(
+        df.repartitionById(len(todo), F.col("_chunk_").cast("int")), seq,
+        max_records_per_file, group_col="_chunk_",
     )
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    try:
-        w.partitionBy("_chunk_", *spec.names).parquet(stage)
-    except Exception:
-        table.io.rmtree(stage)
-        raise
+    rows_total = sum(e.record_count for es in per_chunk.values() for e in es)
 
-    # promote planned on the driver, published with ONE bulk FileIO call
-    moved: list[tuple[int, str, str, dict]] = []
-    pairs: list[tuple[str, str]] = []
-    dest_dirs: set[str] = set()
-    for src in table.io.walk_files(stage):
-        name = os.path.basename(src)
-        if not name.endswith(".parquet"):
-            continue
-        rel_dir = os.path.relpath(os.path.dirname(src), stage)
-        comps = [] if rel_dir == "." else rel_dir.split(os.sep)
-        if not comps or not comps[0].startswith("_chunk_="):
-            continue
-        ci = int(comps[0].split("=", 1)[1])
-        partition = _parse_partition(os.path.join(*comps[1:]) if comps[1:] else ".")
-        dest_dir = (
-            os.path.join(table.root, "data", *comps[1:])
-            if comps[1:]
-            else os.path.join(table.root, "data")
-        )
-        dest_dirs.add(dest_dir)
-        dest = os.path.join(dest_dir, f"{seq:06d}-{uuid.uuid4().hex}.parquet")
-        pairs.append((src, dest))
-        moved.append((ci, dest, os.path.relpath(dest, table.root), partition))
-    for d in sorted(dest_dirs):
-        table.io.makedirs(d)
-    table._promote(pairs, stage)
-    table.io.rmtree(stage)
-
-    stats = collect_file_stats(table.spark, [m[1] for m in moved])
-    per_chunk: dict[int, list[FileEntry]] = {}
-    empties: list[str] = []
-    rows_total = 0
-    for ci, abspath, rel, partition in moved:
-        st = stats[abspath]
-        if st["record_count"] == 0:
-            empties.append(abspath)
-            continue
-        rows_total += st["record_count"]
-        per_chunk.setdefault(ci, []).append(
-            FileEntry(DATA, rel, partition, seq, st["record_count"],
-                      st["file_size_bytes"], st["mins"], st["maxs"],
-                      st["null_counts"])
-        )
-    if empties:
-        table.io.remove_many(empties)
-
-    GROUP = 16
     executed = 0
-    for g in range(0, len(todo), GROUP):
-        group = list(enumerate(todo))[g : g + GROUP]
+    for g in range(0, len(todo), COMMIT_GROUP):
+        group = list(enumerate(todo))[g : g + COMMIT_GROUP]
         added = [e for i, _ in group for e in per_chunk.get(i, [])]
         table._commit_snapshot(
             "append", added,

@@ -1,5 +1,5 @@
-"""Compaction executors: bulk (one job) vs bins (thread pool) equivalence,
-and in-stream pixel verification."""
+"""Compaction executor (one Spark job for every bin): row-set preservation,
+in-stream pixel verification, and predicate-scoped plans."""
 
 import os
 
@@ -30,16 +30,11 @@ def _table(spark, root):
 class TestExecutors:
     def test_bulk_equals_bins(self, spark, tmp_table_dir):
         ta = _table(spark, os.path.join(tmp_table_dir, "a"))
-        tb = _table(spark, os.path.join(tmp_table_dir, "b"))
         expected = ta.scan().select("image_id", "caption", "phash")
-        ra = run_compaction(ta, "a", fill_ratio=1.0, target_bytes=TARGET, mode="bulk")
-        rb = run_compaction(tb, "b", fill_ratio=1.0, target_bytes=TARGET, mode="bins")
-        assert ra["mode"] == "bulk" and "mode" not in rb
+        ra = run_compaction(ta, "a", fill_ratio=1.0, target_bytes=TARGET)
         assert ra["bins_executed"] > 1
         got_a = ta.scan().select("image_id", "caption", "phash")
-        got_b = tb.scan().select("image_id", "caption", "phash")
         assert row_sets_equal(expected, got_a)
-        assert row_sets_equal(got_a, got_b)
 
     def test_bulk_single_spark_job_rowcount(self, spark, tmp_table_dir):
         t = _table(spark, os.path.join(tmp_table_dir, "c"))

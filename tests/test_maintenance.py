@@ -71,8 +71,10 @@ class TestCompaction:
         t = fragmented_table
         log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "mlog"))
         expected = t.scan().select("image_id", "phash")
+        planned = plan_compaction(t, TARGET, fill_ratio=1.0)
         r1 = run_compaction(t, "job-r", log=log, fill_ratio=1.0, stop_after_bins=1)
         assert r1["bins_executed"] == 1
+        assert r1["bins_planned"] == len(planned) > 1
         # "crash" happened; rerun same job_id → already-done bin skipped
         r2 = run_compaction(t, "job-r", log=log, fill_ratio=1.0)
         assert r2["bins_skipped"] >= 0  # surviving bins may re-plan differently
@@ -87,6 +89,43 @@ class TestCompaction:
         for b in bins:
             parts = {json.dumps(f.partition, sort_keys=True) for f in b.files}
             assert len(parts) == 1
+
+
+class TestEncodedRoot:
+    """Spark reports row file locations as URIs, so a root named
+    `a b%c+d é` reads back percent-encoded; every path comparison against
+    the manifests must decode them."""
+
+    def test_deletes_compaction_and_bloom(self, spark, tmp_table_dir):
+        from olake_spark.icelite.bloom import (bloom_file_filter,
+                                               build_bloom_index, point_lookup)
+        from olake_spark.operators.compact import rewrite_position_deletes
+
+        t = Table.create(
+            spark, os.path.join(tmp_table_dir, "a b%c+d é"),
+            datagen.IMAGES_SCHEMA,
+            PartitionSpec((PartitionField("image_id", "bucket", 2),)),
+            identifier_fields=("image_id",),
+        )
+        datagen.fragmented_append(t, datagen.gen_images_df(spark, N), N, n_files=20)
+        num = "cast(substring(image_id, 5, 12) as bigint)"
+        expected = t.scan().select("image_id", "phash").filter(f"{num} % 10 > 1")
+        for r in (0, 1):
+            assert t.delete_where(f"{num} % 10 = {r}")["rows_deleted"] == N // 10
+        assert row_sets_equal(expected, t.scan().select("image_id", "phash"))
+
+        res = rewrite_position_deletes(t)
+        assert res["rewritten_files"] == 2 and res["kept_marks"] == 2 * N // 10
+        assert row_sets_equal(expected, t.scan().select("image_id", "phash"))
+
+        res = run_compaction(t, "enc", fill_ratio=1.0, target_bytes=TARGET)
+        assert res["bins_executed"] > 1  # bins of both buckets in one job
+        assert row_sets_equal(expected, t.scan().select("image_id", "phash"))
+
+        build_bloom_index(t, "image_id")
+        key = "img-000000000002"
+        assert len(bloom_file_filter(t, "image_id", [key])) == 1
+        assert [r.image_id for r in point_lookup(t, "image_id", [key]).collect()] == [key]
 
 
 class TestClustering:

@@ -24,6 +24,7 @@ from olake_spark.icelite.table import DATA
 from olake_spark.operators.cluster import run_cluster_rewrite
 from olake_spark.operators.compact import run_compaction
 from olake_spark.operators.merge import merge_into
+from olake_spark.sync import backfill
 from olake_spark.verify import row_sets_equal
 
 N = 300
@@ -143,42 +144,71 @@ class TestPromoteParallelism:
 
 
 class TestMidPromoteFault:
-    def test_fault_then_resume(self, spark, tmp_table_dir):
-        """Kill the promote mid-batch (after copy, before delete — both names
-        exist), assert the table is untouched and carries zero uncommitted
-        garbage after the abort path, then resume the SAME job to completion."""
+    @pytest.mark.parametrize(
+        "op", ["append", "backfill", "delete_where", "run_compaction"]
+    )
+    def test_fault_then_resume(self, spark, tmp_table_dir, op):
+        """Kill a writer's promote mid-batch (after copy, before delete —
+        both names exist), assert the table is untouched and carries zero
+        uncommitted garbage after the abort path, then rerun the SAME
+        operation to completion."""
         io = FakeObjectStoreFileIO()
         root = os.path.join(tmp_table_dir, "fault")
         t = _mk_table(spark, root, io)
-        before = t.scan().select("image_id", "caption", "phash")
+        cols = ["image_id", "caption", "phash"]
+        before = t.scan().select(*cols)
         snap_before = t.current_snapshot_id
         log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "log"))
+        new = datagen.gen_images_df(spark, N + 40).filter(
+            F.col("image_id") >= f"img-{N:012d}"
+        )
+        doomed = "cast(substring(image_id, 5, 12) as bigint) % 10 = 0"
+        run, expected = {
+            "append": (
+                lambda: t.append(new, max_records_per_file=4),
+                before.unionByName(new.select(*cols)),
+            ),
+            "backfill": (
+                lambda: backfill(t, new, "phash", "f-job", log=log, n_chunks=4,
+                                 max_records_per_file=4),
+                before.unionByName(new.select(*cols)),
+            ),
+            "delete_where": (
+                lambda: t.delete_where(doomed),
+                before.filter(f"NOT ({doomed})"),
+            ),
+            "run_compaction": (
+                lambda: run_compaction(t, "f-job", log=log, fill_ratio=1.0,
+                                       target_bytes=TARGET),
+                before,
+            ),
+        }[op]
 
-        io.fail_renames_after = 3
+        # a delete may write a single file: fail its first rename
+        io.fail_renames_after = 0 if op == "delete_where" else 3
         with pytest.raises(FaultInjected):
-            run_compaction(t, "f-job", log=log, fill_ratio=1.0,
-                           target_bytes=TARGET)
+            run()
         io.fail_renames_after = None
 
         # no snapshot advanced; reader-visible state identical
         t.refresh()
         assert t.current_snapshot_id == snap_before
-        assert row_sets_equal(before, t.scan().select("image_id", "caption", "phash"))
+        assert row_sets_equal(before, t.scan().select(*cols))
         # the abort path deleted every already-promoted destination: no
         # unreferenced parquet outside the staged dirs survives
         live = {e.file_path for e in t.entries()}
         stray = [
             os.path.relpath(p, t.root)
-            for p in io.walk_files(os.path.join(root, "data"))
+            for d in ("data", "deletes")
+            for p in io.walk_files(os.path.join(root, d))
             if p.endswith(".parquet")
             and os.path.relpath(p, t.root) not in live
         ]
         assert stray == []
 
-        res = run_compaction(t, "f-job", log=log, fill_ratio=1.0,
-                             target_bytes=TARGET)
-        assert res["bins_executed"] > 0
-        assert row_sets_equal(before, t.scan().select("image_id", "caption", "phash"))
+        run()
+        assert t.current_snapshot_id != snap_before
+        assert row_sets_equal(expected, t.scan().select(*cols))
 
     def test_hard_crash_leftovers_are_reaped(self, spark, tmp_table_dir):
         """A hard crash (no in-process abort path) can leave promoted-but-

@@ -199,7 +199,34 @@ class TestShufflePlacement:
 
         t, plans = write_plans
         res = run_compaction(t, "pin", fill_ratio=1.0, target_bytes=1 << 30)
-        assert res["mode"] == "bulk" and res["bins_executed"] == 2
+        assert res["bins_executed"] == 2
+        self.assert_direct(plans)
+
+    def test_one_bin_compaction_is_direct_shuffle(self, spark, tmp_table_dir, write_plans):
+        from olake_spark.operators.compact import run_compaction
+
+        _, plans = write_plans
+        t = Table.create(
+            spark, os.path.join(tmp_table_dir, "u"), datagen.IMAGES_SCHEMA,
+            identifier_fields=("image_id",),
+        )
+        t.append(datagen.gen_images_df(spark, 40), max_records_per_file=4)
+        plans.clear()
+        res = run_compaction(t, "pin", fill_ratio=1.0, target_bytes=1 << 30)
+        assert res["bins_planned"] == res["bins_executed"] == 1
+        # the bulk path, not a shuffle-free coalesce(1): Spark plans
+        # repartitionById into one partition as a SinglePartition exchange
+        shuffled = [p for p in plans if "Exchange" in p]
+        assert len(shuffled) == 1, plans
+        assert "Exchange SinglePartition, REPARTITION_BY_NUM" in shuffled[0]
+        assert "hashpartitioning" not in shuffled[0]
+
+    def test_backfill_is_direct_shuffle(self, spark, write_plans):
+        from olake_spark.sync import backfill
+
+        t, plans = write_plans
+        res = backfill(t, datagen.gen_images_df(spark, 40), "phash", "pin", n_chunks=4)
+        assert res["chunks_executed"] > 1
         self.assert_direct(plans)
 
 
