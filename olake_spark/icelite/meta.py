@@ -23,6 +23,7 @@ here they are re-expressed over icelite's parquet manifests.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -64,7 +65,10 @@ def _tagged_entries(table: Table, pairs: list[tuple[int, str]]) -> DataFrame:
             F.substring(uri_path(F.col("_metadata.file_path")), rel_start, 1000000),
         )
     )
-    pairs_df = table.spark.createDataFrame(pairs, _PAIRS_SCHEMA)
+    # from pandas through Arrow: a LocalTableScan, no Python-worker job
+    pairs_df = table.spark.createDataFrame(
+        pd.DataFrame(pairs, columns=_PAIRS_SCHEMA.names), _PAIRS_SCHEMA
+    )
     return entries.join(F.broadcast(pairs_df), "manifest_path")
 
 

@@ -119,6 +119,7 @@ def rewrite_position_deletes(
     that folded/purged any of them surfaces as CommitConflict (removal-set
     validation) and the whole op re-plans from fresh metadata. Concurrent
     NEW delete commits are untouched and stay live — no guard needed."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     last: Exception | None = None
@@ -139,7 +140,7 @@ def rewrite_position_deletes(
         )
         live_df = F.broadcast(
             table.spark.createDataFrame(
-                [(p,) for p in live], "file_path string"
+                pd.DataFrame({"file_path": live}), "file_path string"
             )
         )
         kept = (
@@ -274,6 +275,7 @@ def _run_bulk(
 ) -> dict:
     """Rewrite `todo` in ONE Spark job, then commit it COMMIT_GROUP bins per
     snapshot. Returns the executed bin, row and byte counts."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     spark = table.spark
@@ -286,7 +288,13 @@ def _run_bulk(
         for i, b in enumerate(todo)
         for f in b.files
     ]
-    mapping = spark.createDataFrame(pairs, ["_input_file", "_bin_"])
+    # built through Arrow from pandas (a LocalTableScan): a Python-list
+    # createDataFrame plans as Scan ExistingRDD and runs a Python-worker job
+    # when the broadcast materializes
+    mapping = spark.createDataFrame(
+        pd.DataFrame(pairs, columns=["_input_file", "_bin_"]),
+        "_input_file string, _bin_ bigint",
+    )
 
     df = table.scan(
         snapshot_id=pin_snapshot, file_filter=rel_paths, with_input_file=True

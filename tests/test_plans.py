@@ -202,6 +202,18 @@ class TestShufflePlacement:
         assert res["bins_executed"] == 2
         self.assert_direct(plans)
 
+    def test_bulk_compaction_bin_map_is_local(self, write_plans):
+        """The broadcast file→bin map is built through Arrow from pandas:
+        a LocalTableScan, not a Python RDD (`Scan ExistingRDD`) whose
+        broadcast runs a Python-worker job."""
+        from olake_spark.operators.compact import run_compaction
+
+        t, plans = write_plans
+        run_compaction(t, "pin", fill_ratio=1.0, target_bytes=1 << 30)
+        assert plans
+        assert all("ExistingRDD" not in p for p in plans), plans
+        assert any("LocalTableScan" in p for p in plans), plans
+
     def test_one_bin_compaction_is_direct_shuffle(self, spark, tmp_table_dir, write_plans):
         from olake_spark.operators.compact import run_compaction
 
