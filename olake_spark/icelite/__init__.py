@@ -22,8 +22,8 @@ parquet manifests readable as DataFrames for metadata-driven planning
 """
 
 from olake_spark.icelite.fileio import (ConditionalPutFileIO,  # noqa: F401
-                                        FakeObjectStoreFileIO, FaultInjected,
-                                        FileIO, LocalFileIO, default_io)
+                                        FakeObjectStoreFileIO, FileIO,
+                                        LocalFileIO, default_io)
 from olake_spark.icelite.catalog import (Catalog,  # noqa: F401
                                          NoSuchTableError,
                                          TableAlreadyExistsError)

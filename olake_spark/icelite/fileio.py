@@ -19,8 +19,10 @@ implementing ONE class, not editing the engine:
 
 Data-plane reads/writes (Spark parquet jobs, pyarrow manifest IO) stay
 path-based: Spark and pyarrow already speak s3a/hdfs/gs URLs natively, so
-the engine needs no shim there — only the metadata-side create/list/rename
-calls, which object stores service differently from POSIX.
+the engine needs no shim there — only the metadata-side create/list/delete
+calls, which object stores service differently from POSIX. The interface
+has no rename: written files are registered where Spark's commit left them,
+as Iceberg writers do, so no engine path needs one.
 """
 
 from __future__ import annotations
@@ -76,26 +78,14 @@ class FileIO:
     def makedirs(self, path: str) -> None:
         raise NotImplementedError
 
-    def rename(self, src: str, dst: str) -> None:
-        raise NotImplementedError
-
-    def rename_many(self, pairs: list[tuple[str, str]]) -> None:
-        """Promote a whole batch of files in ONE FileIO call. Engine promote
-        paths (staged write → final location) MUST use this, never a per-file
-        rename loop: the driver's work is then O(1) calls per write job, and
-        an object-store implementation is free to run the batch as parallel
-        server-side copy requests (each of which is a copy+delete, not an
-        atomic rename)."""
-        for src, dst in pairs:
-            self.rename(src, dst)
-
     def remove(self, path: str) -> None:
         raise NotImplementedError
 
     def remove_many(self, paths: list[str]) -> None:
         """Batched delete — the object-store analogue is DeleteObjects (one
-        request per 1000 keys); same O(1)-driver-calls contract as
-        rename_many."""
+        request per 1000 keys). Engine paths that delete many files MUST use
+        this, never a per-file remove loop: the driver's work is then O(1)
+        calls per write job or reap."""
         for p in paths:
             self.remove(p)
 
@@ -145,9 +135,6 @@ class LocalFileIO(FileIO):
     def makedirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
 
-    def rename(self, src: str, dst: str) -> None:
-        os.replace(src, dst)
-
     def remove(self, path: str) -> None:
         os.remove(path)
 
@@ -181,19 +168,13 @@ class ConditionalPutFileIO(LocalFileIO):
             return True
 
 
-class FaultInjected(OSError):
-    """Raised by FakeObjectStoreFileIO when an injected fault fires."""
-
-
 class FakeObjectStoreFileIO(FileIO):
-    """Object-store semantics on local disk, with fault injection — the
-    in-sandbox stand-in for S3FileIO the round-2 verdict asked for
-    (reference: catalog/FileIO split + S3 semantics, iceberg_utils.go:197-260).
-    Breaks every POSIX assumption an engine might lean on:
+    """Object-store semantics on local disk — the in-sandbox stand-in for
+    S3FileIO (reference: catalog/FileIO split + S3 semantics,
+    iceberg_utils.go:197-260). Breaks the POSIX assumptions an engine might
+    lean on:
 
-    - **No atomic rename**: `rename` is COPY then DELETE (S3 has no rename at
-      all). A fault between the two leaves BOTH source and destination — the
-      worst case promote/resume logic must survive.
+    - **No rename**: S3 has none, and neither has the FileIO interface.
     - **No hard links**: the commit CAS is a conditional put (`If-None-Match`)
       served under the (simulated) store endpoint's serialization, like
       ConditionalPutFileIO. `os.link` is never used.
@@ -201,29 +182,16 @@ class FakeObjectStoreFileIO(FileIO):
       object stores have no partial objects); the simulator's own use of a
       temp-file + replace *inside* a PUT models the store's internal
       atomicity, not a capability offered to the engine.
-    - **rename_many** runs the batch as parallel copy+delete requests (a
-      thread pool standing in for concurrent HTTP requests), so a promote's
-      wall-clock is batch/parallelism, not O(files) serial round-trips.
 
-    Fault injection: `fail_renames_after=k` makes the k+1-th rename fail
-    AFTER the copy and BEFORE the delete (duplicating the object — the
-    nastiest crash point); `latency_s` adds per-request latency so tests can
-    surface accidental per-file loops as wall-clock. `counts` tallies every
-    API call for bounded-driver-work assertions."""
+    `latency_s` adds per-request latency so tests can surface accidental
+    per-file loops as wall-clock. `counts` tallies every API call for
+    bounded-driver-work assertions."""
 
     _cas_lock = threading.Lock()  # the store endpoint's serialization
 
-    def __init__(
-        self,
-        fail_renames_after: int | None = None,
-        latency_s: float = 0.0,
-        parallelism: int = 16,
-    ):
-        self.fail_renames_after = fail_renames_after
+    def __init__(self, latency_s: float = 0.0):
         self.latency_s = latency_s
-        self.parallelism = parallelism
         self.counts: Counter = Counter()
-        self._renames_done = 0
         self._count_lock = threading.Lock()
 
     # -- internals ---------------------------------------------------------
@@ -233,22 +201,6 @@ class FakeObjectStoreFileIO(FileIO):
             self.counts[op] += 1
         if self.latency_s:
             time.sleep(self.latency_s)
-
-    def _copy_delete(self, src: str, dst: str) -> None:
-        """One 'rename' request: server-side copy, then delete-source."""
-        tmp = f"{dst}.put-{uuid.uuid4().hex}"
-        shutil.copyfile(src, tmp)
-        os.replace(tmp, dst)  # the PUT's whole-object atomicity (see class doc)
-        with self._count_lock:
-            self._renames_done += 1
-            if (
-                self.fail_renames_after is not None
-                and self._renames_done > self.fail_renames_after
-            ):
-                raise FaultInjected(
-                    f"injected fault after copy, before delete: {src} -> {dst}"
-                )
-        os.remove(src)
 
     # -- FileIO API --------------------------------------------------------
 
@@ -291,23 +243,6 @@ class FakeObjectStoreFileIO(FileIO):
         # plane (Spark parquet jobs) can write under the same root
         self._tick("makedirs")
         os.makedirs(path, exist_ok=True)
-
-    def rename(self, src: str, dst: str) -> None:
-        self._tick("rename")
-        self._copy_delete(src, dst)
-
-    def rename_many(self, pairs: list[tuple[str, str]]) -> None:
-        self._tick("rename_many")
-        if not pairs:
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(self.parallelism, len(pairs))
-        ) as ex:
-            # materialize to surface the FIRST failure; remaining futures
-            # still run (parallel requests already in flight)
-            list(ex.map(lambda p: self._copy_delete(*p), pairs))
 
     def remove(self, path: str) -> None:
         self._tick("remove")

@@ -375,12 +375,6 @@ class RestCommitIO(FileIO):
     def makedirs(self, path):
         return self._base.makedirs(path)
 
-    def rename(self, src, dst):
-        return self._base.rename(src, dst)
-
-    def rename_many(self, pairs):
-        return self._base.rename_many(pairs)
-
     def remove(self, path):
         return self._base.remove(path)
 

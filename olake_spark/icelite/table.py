@@ -23,8 +23,9 @@ catalog-vs-FileIO split, iceberg_utils.go:197-260):
     <root>/metadata/v00001.metadata.json     ← linearization point
     <root>/metadata/version-hint.text        ← advisory cache
     <root>/metadata/manifests/mf-*.parquet   ← one row per data/delete file
-    <root>/data/<_p_col=val>/....parquet     ← data files (hive-style dirs)
-    <root>/deletes/....parquet               ← equality-delete key files
+    <root>/data/<seq>-<uuid>/<_p_col=val>/*.parquet  ← data files, one
+                                               directory per write job
+    <root>/deletes/<seq>-<uuid>/*.parquet    ← equality/positional deletes
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ from typing import Any, Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, LongType,
                                StringType, StructField, StructType)
@@ -52,6 +53,9 @@ from olake_spark.icelite.stats import collect_file_stats
 DATA = 0
 POS_DELETES = 1  # Iceberg v2 positional deletes: rows of (file_path, pos)
 EQ_DELETES = 2
+
+# `write.target-file-size-bytes` when a table does not set it
+DEFAULT_TARGET_FILE_SIZE = 512 * 1024 * 1024
 
 # broadcast the aggregated delete-key side of the scan anti-join when it is
 # estimated under this many rows ("broadcast-or-sort-merge join against
@@ -188,7 +192,7 @@ class Table:
         io.makedirs(os.path.join(root, "deletes"))
         props = {
             "format-version": "2",
-            "write.target-file-size-bytes": str(512 * 1024 * 1024),
+            "write.target-file-size-bytes": str(DEFAULT_TARGET_FILE_SIZE),
             **(properties or {}),
         }
         # declared table sort order (O3): the reference tables carry PK-asc
@@ -273,6 +277,13 @@ class Table:
     @property
     def sort_order(self) -> list[str]:
         return list(self.meta.get("sort_order", []))
+
+    @property
+    def target_file_size(self) -> int:
+        """`write.target-file-size-bytes`: the size rewrites pack files to."""
+        return int(self.meta["properties"].get(
+            "write.target-file-size-bytes", DEFAULT_TARGET_FILE_SIZE
+        ))
 
     @property
     def current_snapshot_id(self) -> int | None:
@@ -992,10 +1003,11 @@ class Table:
     ) -> list[FileEntry] | dict[int, list[FileEntry]]:
         """Write data files into <root>/data/ and return manifest entries.
 
-        Partition columns are materialized and hive-encoded into directory
-        paths (Spark `partitionBy`), mirroring the reference's partition-path
-        routing (parquet.go:310-368); files are then promoted from the staging
-        dir with unique names — rename, not copy.
+        Each write job gets its own `data/<seq>-<uuid>/` directory, and the
+        files stay where Spark's commit left them — no rename. Partition
+        columns are materialized and hive-encoded into directories under it
+        (Spark `partitionBy`), mirroring the reference's partition-path
+        routing (parquet.go:310-368).
 
         `group_col` names an integer column that tags each row with its unit
         of commit (a compaction bin, a backfill chunk). It leads the
@@ -1003,7 +1015,6 @@ class Table:
         {group id: entries} so the caller can commit groups separately.
         """
         spec = self.spec
-        stage = os.path.join(self.root, "data", f".stage-{uuid.uuid4().hex}")
         out = spec.apply(df)
         lead = [group_col] if group_col else []
         if sort_within_by is None:
@@ -1025,95 +1036,71 @@ class Table:
             w = w.option("maxRecordsPerFile", max_records_per_file)
         if lead or spec.fields:
             w = w.partitionBy(*lead, *spec.names)
-        try:
-            w.parquet(stage)
-        except Exception:
-            self.io.rmtree(stage)
-            raise
-        groups = self._publish_stage(stage, seq, DATA, group_col)
+        groups = self._write_job(w, seq, DATA, group_col)
         return groups if group_col else groups.get(None, [])
 
-    def _publish_stage(
+    def _write_job(
         self,
-        stage: str,
+        writer: DataFrameWriter,
         seq: int,
         content: int,
         group_col: str | None = None,
     ) -> dict[int | None, list[FileEntry]]:
-        """Turn a finished Spark write into manifest entries: the one place
-        that promotes staged files and harvests their footer stats.
+        """Run a Spark parquet write into a fresh job directory and turn its
+        output into manifest entries: the one place that harvests footer
+        stats.
 
-        Data files keep their hive partition directories under data/; delete
-        files land under deletes/. Each file gets a unique `<seq>-<uuid>`
-        name, and the whole batch is published with ONE bulk FileIO call.
-        Empty files are deleted, not committed (the reference deletes empty
-        files, parquet.go:210-283). Entries are keyed by the value of the
-        leading `group_col` directory, or None without one.
+        Data files land under `data/<seq>-<uuid>/`, delete files under
+        `deletes/<seq>-<uuid>/` (no leading dot: Spark's reader skips hidden
+        path components). Iceberg paths are opaque, so each parquet file is
+        recorded at the path Spark wrote; a crash before the commit leaves
+        only unreferenced files, which `remove_orphan_files` reaps. Empty
+        files (the reference deletes them too, parquet.go:210-283) and
+        Spark's side files (`_SUCCESS`, `.crc`) go in ONE bulk FileIO call.
+        Entries are keyed by the value of the leading `group_col` directory,
+        or None without one.
         """
         base = os.path.join(self.root, "data" if content == DATA else "deletes")
-        moved: list[tuple[int | None, str, dict]] = []  # (group, dest, partition)
-        pairs: list[tuple[str, str]] = []
-        for src in self.io.walk_files(stage):
-            if not src.endswith(".parquet"):
+        job = os.path.join(base, f"{seq:06d}-{uuid.uuid4().hex}")
+        try:
+            writer.parquet(job)
+        except Exception:
+            self.io.rmtree(job)
+            raise
+        written: list[tuple[int | None, str, dict]] = []  # (group, path, partition)
+        junk: list[str] = []
+        for path in self.io.walk_files(job):
+            if not path.endswith(".parquet"):
+                junk.append(path)
                 continue
-            rel_dir = os.path.relpath(os.path.dirname(src), stage)
+            rel_dir = os.path.relpath(os.path.dirname(path), job)
             comps = [] if rel_dir == "." else rel_dir.split(os.sep)
             group = int(comps.pop(0).split("=", 1)[1]) if group_col else None
-            dest = os.path.join(
-                base, *comps, f"{seq:06d}-{uuid.uuid4().hex}.parquet"
-            )
-            pairs.append((src, dest))
-            moved.append((group, dest, _parse_partition(os.sep.join(comps))))
-        # base holds the stage, so only partition directories can be missing
-        for d in sorted({os.path.dirname(dst) for _, dst in pairs} - {base}):
-            self.io.makedirs(d)
-        self._promote(pairs, stage)
-        self.io.rmtree(stage)
+            written.append((group, path, _parse_partition(os.sep.join(comps))))
 
-        stats = collect_file_stats(self.spark, [m[1] for m in moved])
+        stats = collect_file_stats(self.spark, [p for _, p, _ in written])
         groups: dict[int | None, list[FileEntry]] = {}
-        empties: list[str] = []
-        for group, dest, partition in moved:
-            st = stats[dest]
+        for group, path, partition in written:
+            st = stats[path]
             if st["record_count"] == 0:
-                empties.append(dest)
+                junk.append(path)
                 continue
             groups.setdefault(group, []).append(
                 FileEntry(
-                    content, os.path.relpath(dest, self.root), partition, seq,
+                    content, os.path.relpath(path, self.root), partition, seq,
                     st["record_count"], st["file_size_bytes"],
                     st["mins"], st["maxs"], st["null_counts"],
                 )
             )
-        if empties:
-            self.io.remove_many(empties)
+        if junk:
+            self.io.remove_many(junk)
         return groups
 
-    def _promote(self, pairs: list[tuple[str, str]], stage: str) -> None:
-        """Publish staged files with ONE bulk FileIO call — O(1) driver calls
-        per write job regardless of file count; an object-store FileIO runs
-        the batch as parallel copy+delete requests. On failure: best-effort
-        delete of destinations already materialized (copy+delete stores can
-        leave BOTH names on a mid-batch fault), rmtree the stage, re-raise —
-        no commit referenced these files, so anything a hard crash still
-        leaves behind is reaped by remove_orphan_files."""
-        try:
-            self.io.rename_many(pairs)
-        except Exception:
-            for _src, dst in pairs:
-                try:
-                    self.io.remove(dst)
-                except OSError:
-                    pass
-            self.io.rmtree(stage)
-            raise
-
     def _write_delete_files(self, keys_df: DataFrame, seq: int) -> list[FileEntry]:
-        stage = os.path.join(self.root, "deletes", f".stage-{uuid.uuid4().hex}")
-        keys_df.select(*self.identifier_fields).withColumn(
+        w = keys_df.select(*self.identifier_fields).withColumn(
             "_delete_seq", F.lit(seq)
-        ).write.mode("overwrite").parquet(stage)
-        return self._publish_stage(stage, seq, EQ_DELETES).get(None, [])
+        ).write.mode("overwrite")
+        return self._write_job(w, seq, EQ_DELETES).get(None, [])
 
     def _write_pos_delete_files(
         self, hits: DataFrame, seq: int, n_files: int | None = None
@@ -1124,19 +1111,14 @@ class Table:
         deletes against one data file land together. `n_files` pins the
         output file count (consolidation rewrites); default lets the
         session's shuffle parallelism decide."""
-        stage = os.path.join(self.root, "deletes", f".stage-{uuid.uuid4().hex}")
         sel = hits.select("file_path", "pos")
         part = (
             sel.repartition(n_files, F.col("file_path"))
             if n_files
             else sel.repartition(F.col("file_path"))
         )
-        (
-            part.sortWithinPartitions("file_path", "pos")
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        return self._publish_stage(stage, seq, POS_DELETES).get(None, [])
+        w = part.sortWithinPartitions("file_path", "pos").write.mode("overwrite")
+        return self._write_job(w, seq, POS_DELETES).get(None, [])
 
     def _new_manifest(self, entries: list[FileEntry]) -> str:
         rel = os.path.join("metadata", "manifests", f"mf-{uuid.uuid4().hex}.parquet")
@@ -2461,7 +2443,7 @@ class Table:
 
         `distributed=None` auto-selects the listing strategy: a driver-side
         walk bounded by DISTRIBUTED_LIST_THRESHOLD files, else a Spark listing
-        job — one task per first-level (partition) directory, each executor
+        job — one task per first-level (write-job) directory, each executor
         listing its own prefix with mtimes, the object-store pattern. Either
         way the deletion is ONE batched remove_many call, so driver FileIO
         work stays O(1) calls no matter how many orphans exist."""
@@ -2519,7 +2501,7 @@ def _list_files_spark(
     spark: SparkSession, io: FileIO, roots: list[str]
 ) -> list[tuple[str, float]]:
     """Distributed prefix listing for orphan reaping: the driver enumerates
-    only FIRST-level entries (partition directories) through the FileIO; each
+    only FIRST-level entries (write-job directories) through the FileIO; each
     executor task then walks one subtree and returns (path, mtime). In local
     mode tasks share the filesystem; on a deployment each executor lists its
     own object-store prefix — driver work is O(first-level dirs), never

@@ -136,11 +136,7 @@ def inspect_health(table: Table, policy: dict | None = None) -> dict:
     pol = resolve_policy(table, policy)
     table.refresh()
     entries = table.entries()
-    target = int(
-        table.meta["properties"].get("write.target-file-size-bytes",
-                                     512 * 1024 * 1024)
-    )
-    small_below = int(target * float(pol["compact.fill-ratio"]))
+    small_below = int(table.target_file_size * float(pol["compact.fill-ratio"]))
     data = [e for e in entries if e.content == DATA]
     pos = [e for e in entries if e.content == POS_DELETES]
     eq = [e for e in entries if e.content == EQ_DELETES]

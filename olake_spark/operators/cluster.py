@@ -124,11 +124,7 @@ def run_cluster_rewrite(
     """Rewrite the whole table clustered by the chosen curve key."""
     table.refresh()
     if target_bytes is None:
-        target_bytes = int(
-            table.meta["properties"].get(
-                "write.target-file-size-bytes", 512 * 1024 * 1024
-            )
-        )
+        target_bytes = table.target_file_size
     snap_before = table.current_snapshot_id
     entries = table.entries()
     data_entries = [e for e in entries if e.content == DATA]

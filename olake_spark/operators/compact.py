@@ -33,8 +33,6 @@ from olake_spark.icelite.table import (COMMIT_GROUP, DATA, EQ_DELETES,
                                        POS_DELETES, CommitConflict, FileEntry,
                                        Table)
 
-DEFAULT_TARGET = 512 * 1024 * 1024
-
 
 def purge_dead_deletes(table: Table) -> int:
     """Drop delete files that no longer apply to any live data file.
@@ -211,9 +209,7 @@ def plan_compaction(
     10^12-row table compacts yesterday's partitions, not its whole history.
     """
     if target_bytes is None:
-        target_bytes = int(
-            table.meta["properties"].get("write.target-file-size-bytes", DEFAULT_TARGET)
-        )
+        target_bytes = table.target_file_size
     small_cut = int(target_bytes * fill_ratio)
     entries = table.entries(snapshot_id)
     if predicates:
@@ -357,10 +353,9 @@ def _run_bulk(
         except CommitConflict as ce:
             # earlier groups are committed (and logged); this group and every
             # later one are not. Delete their already-written output files so
-            # the abort leaves zero orphans (ONE batched FileIO call, same
-            # O(1)-driver-calls contract as the promote), then propagate —
-            # run_compaction re-plans from fresh metadata and redoes the
-            # remaining bins. The committed groups' counts ride on the
+            # the abort leaves zero orphans (ONE batched FileIO call), then
+            # propagate — run_compaction re-plans from fresh metadata and
+            # redoes the remaining bins. The committed groups' counts ride on the
             # exception so the caller's summary stays accurate.
             victims = [
                 table._abs(e.file_path)
@@ -445,9 +440,7 @@ def run_compaction(
             .lower() == "true"
         )
     if target_bytes is None:
-        target_bytes = int(
-            table.meta["properties"].get("write.target-file-size-bytes", DEFAULT_TARGET)
-        )
+        target_bytes = table.target_file_size
 
     # a concurrent equality-delete commit can CommitConflict the per-group
     # commit loop midway: committed groups stand, _run_bulk has already

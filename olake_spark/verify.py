@@ -87,10 +87,10 @@ def verify_pixels(df: DataFrame, bench: bool = False) -> DataFrame:
     )
 
 
-def inline_pixel_check(df: DataFrame, sample_mod: int = 1) -> DataFrame:
+def inline_pixel_check(df: DataFrame) -> DataFrame:
     """Pass-through verification stage for rewrite pipelines: decode every
-    `sample_mod`-th image and fail the task if the payload is corrupt or the
-    dimensions disagree with (w, h). Rows stream through unchanged, so this
+    image and fail the task if the payload is corrupt or the dimensions
+    disagree with (w, h). Rows stream through unchanged, so this
     composes inside compaction/clustering writes — the north star's
     "correctness verified against decoded pixels" applied *during*
     maintenance instead of as a separate scan."""
@@ -98,8 +98,8 @@ def inline_pixel_check(df: DataFrame, sample_mod: int = 1) -> DataFrame:
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            for i, (raw, w, h) in enumerate(zip(b["bytes"], b["w"], b["h"])):
-                if raw is None or (sample_mod > 1 and i % sample_mod):
+            for raw, w, h in zip(b["bytes"], b["w"], b["h"]):
+                if raw is None:
                     continue
                 arr = decode_image(bytes(raw))
                 if arr.shape[0] != int(h) or arr.shape[1] != int(w):

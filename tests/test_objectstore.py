@@ -1,11 +1,13 @@
 """Object-store FileIO realism (round-2 verdict item #1).
 
-FakeObjectStoreFileIO breaks every POSIX assumption — rename is copy+delete,
-no hard links, conditional-put commit CAS, injectable mid-promote faults —
-and the engine must hold all its guarantees on top of it, the way the
-reference holds them on S3FileIO (iceberg_utils.go:197-260). Also pins the
-bounded-driver-work contract: promotes and orphan reaps issue O(1) FileIO
-calls (rename_many / remove_many), never per-file loops.
+FakeObjectStoreFileIO breaks every POSIX assumption — no rename, no hard
+links, conditional-put commit CAS — and the engine must hold all its
+guarantees on top of it, the way the reference holds them on S3FileIO
+(iceberg_utils.go:197-260). Written files are registered where Spark's
+commit left them, so a crash between write and commit leaves only
+unreferenced files for the orphan reaper. Also pins the bounded-driver-work
+contract: writes and orphan reaps issue O(1) FileIO calls (one walk_files,
+one remove_many), never per-file loops.
 
 The FULL suite runs under these semantics via `OLAKE_FILEIO=objectstore
 python -m pytest tests/` (default FileIO switch in icelite.fileio.default_io).
@@ -18,17 +20,20 @@ from pyspark.sql import functions as F
 
 from olake_spark import datagen
 from olake_spark.checkpoint import MaintenanceLog
-from olake_spark.icelite import (FakeObjectStoreFileIO, FaultInjected,
+from olake_spark.icelite import (FakeObjectStoreFileIO, LocalFileIO,
                                  PartitionField, PartitionSpec, Table)
 from olake_spark.icelite.table import DATA
+from olake_spark.operators import compact
 from olake_spark.operators.cluster import run_cluster_rewrite
-from olake_spark.operators.compact import run_compaction
+from olake_spark.operators.compact import (rewrite_position_deletes,
+                                           run_compaction)
 from olake_spark.operators.merge import merge_into
 from olake_spark.sync import backfill
 from olake_spark.verify import row_sets_equal
 
 N = 300
 TARGET = 2 * 1024 * 1024
+COLS = ["image_id", "caption", "phash"]
 
 
 def _mk_table(spark, root, io, n=N, n_files=30):
@@ -47,6 +52,22 @@ def _mk_table(spark, root, io, n=N, n_files=30):
 
 def data_files(t):
     return [e for e in t.entries() if e.content == DATA]
+
+
+def physical_files(t) -> set[str]:
+    """Root-relative paths of every file under data/ and deletes/."""
+    return {
+        os.path.relpath(os.path.join(d, f), t.root)
+        for sub in ("data", "deletes")
+        for d, _dirs, files in os.walk(os.path.join(t.root, sub))
+        for f in files
+    }
+
+
+def new_rows(spark):
+    return datagen.gen_images_df(spark, N + 40).filter(
+        F.col("image_id") >= f"img-{N:012d}"
+    )
 
 
 class TestObjectStoreFlow:
@@ -76,22 +97,38 @@ class TestObjectStoreFlow:
             ~F.col("image_id").isin([r[0] for r in ch.select("image_id").collect()])
         ).unionByName(ch.select("image_id", "caption", "phash"))
         assert row_sets_equal(expected, after)
-        # the commit CAS never used hard links and every data promote was a
-        # copy+delete batch
-        assert io.counts["rename_many"] > 0
+        # Spark's side files (_SUCCESS, .crc) never outlive a write
+        assert all(p.endswith(".parquet") for p in physical_files(t))
 
-    def test_promote_bounded_driver_calls(self, spark, tmp_table_dir):
-        """A write that lands many files issues O(1) FileIO calls: one
-        rename_many per staged write, ZERO per-file renames."""
+    def test_write_bounded_driver_calls(self, spark, tmp_table_dir):
+        """Every write job, however many files it lands, issues O(1) FileIO
+        calls: one walk_files, at most one remove_many (side files and
+        empty files together), ZERO per-file removes — and leaves no
+        non-parquet file behind."""
         io = FakeObjectStoreFileIO()
         t = _mk_table(spark, os.path.join(tmp_table_dir, "bd"), io, n_files=40)
         assert len(data_files(t)) >= 20  # many physical files landed
-        assert io.counts["rename"] == 0, "per-file rename loop on promote path"
-        assert io.counts["rename_many"] == 1  # the single append
-        run_compaction(t, "bd-c", fill_ratio=1.0, target_bytes=TARGET)
-        assert io.counts["rename"] == 0
-        # compaction adds exactly one bulk promote (plus none for metadata)
-        assert io.counts["rename_many"] == 2
+        log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "log"))
+
+        def check(counts):
+            assert counts["walk_files"] == 1
+            assert counts["remove_many"] <= 1
+            assert counts["remove"] == 0, "per-file remove loop on a write"
+            assert all(p.endswith(".parquet") for p in physical_files(t))
+
+        check(io.counts)
+        for op in (
+            lambda: t.delete_where("cast(substring(image_id, 5, 12) as bigint) % 7 = 0"),
+            lambda: t.delete_where("cast(substring(image_id, 5, 12) as bigint) % 7 = 1"),
+            lambda: rewrite_position_deletes(t),
+            lambda: run_compaction(t, "bd-c", fill_ratio=1.0, target_bytes=TARGET),
+            lambda: run_cluster_rewrite(t, "bd-z", curve="hilbert"),
+            lambda: backfill(t, new_rows(spark), "phash", "bd-b", log=log,
+                             n_chunks=4),
+        ):
+            io.counts.clear()
+            op()
+            check(io.counts)
 
     def test_orphan_reap_bounded_and_distributed(self, spark, tmp_table_dir):
         io = FakeObjectStoreFileIO()
@@ -125,53 +162,33 @@ class TestObjectStoreFlow:
         assert local == dist and local
 
 
-class TestPromoteParallelism:
-    def test_latency_amortized_by_parallel_batch(self, spark, tmp_table_dir):
-        """With 50 ms of injected per-request latency, a many-file promote
-        must cost ~batch/parallelism, not files × latency — catching any
-        accidental return to a serial per-file loop as wall-clock."""
-        io = FakeObjectStoreFileIO(latency_s=0.05, parallelism=16)
-        t0 = __import__("time").perf_counter()
-        t = _mk_table(spark, os.path.join(tmp_table_dir, "lat"), io,
-                      n_files=40)
-        wall = __import__("time").perf_counter() - t0
-        n_files = len(data_files(t))
-        assert n_files >= 20
-        # serial floor would be ≥ n_files × 50 ms on renames alone; the
-        # parallel batch keeps total FileIO latency near (n/16 + O(1)) × 50ms.
-        # Generous bound: half the serial floor (the write itself dominates).
-        assert wall < 10 + n_files * 0.05 / 2, (wall, n_files)
-
-
-class TestMidPromoteFault:
+class TestFaultAfterWrite:
     @pytest.mark.parametrize(
         "op", ["append", "backfill", "delete_where", "run_compaction"]
     )
-    def test_fault_then_resume(self, spark, tmp_table_dir, op):
-        """Kill a writer's promote mid-batch (after copy, before delete —
-        both names exist), assert the table is untouched and carries zero
-        uncommitted garbage after the abort path, then rerun the SAME
-        operation to completion."""
-        io = FakeObjectStoreFileIO()
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_fault_then_resume(self, spark, tmp_table_dir, monkeypatch,
+                               io_cls, op):
+        """Kill a writer after its Spark write, at the commit: the table is
+        untouched, every file the write left is an orphan the reaper
+        collects, and a rerun of the SAME operation completes."""
         root = os.path.join(tmp_table_dir, "fault")
-        t = _mk_table(spark, root, io)
-        cols = ["image_id", "caption", "phash"]
-        before = t.scan().select(*cols)
+        t = _mk_table(spark, root, io_cls())
+        before = t.scan().select(*COLS)
         snap_before = t.current_snapshot_id
+        files_before = physical_files(t)
         log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "log"))
-        new = datagen.gen_images_df(spark, N + 40).filter(
-            F.col("image_id") >= f"img-{N:012d}"
-        )
+        new = new_rows(spark)
         doomed = "cast(substring(image_id, 5, 12) as bigint) % 10 = 0"
         run, expected = {
             "append": (
                 lambda: t.append(new, max_records_per_file=4),
-                before.unionByName(new.select(*cols)),
+                before.unionByName(new.select(*COLS)),
             ),
             "backfill": (
                 lambda: backfill(t, new, "phash", "f-job", log=log, n_chunks=4,
                                  max_records_per_file=4),
-                before.unionByName(new.select(*cols)),
+                before.unionByName(new.select(*COLS)),
             ),
             "delete_where": (
                 lambda: t.delete_where(doomed),
@@ -184,31 +201,62 @@ class TestMidPromoteFault:
             ),
         }[op]
 
-        # a delete may write a single file: fail its first rename
-        io.fail_renames_after = 0 if op == "delete_where" else 3
-        with pytest.raises(FaultInjected):
+        def crash(*_a, **_kw):
+            raise OSError("injected crash at commit")
+
+        # on the instance: the maintenance log is a Table too and must commit
+        monkeypatch.setattr(t, "_commit", crash)
+        with pytest.raises(OSError, match="injected crash"):
             run()
-        io.fail_renames_after = None
+        monkeypatch.undo()
 
         # no snapshot advanced; reader-visible state identical
         t.refresh()
         assert t.current_snapshot_id == snap_before
-        assert row_sets_equal(before, t.scan().select(*cols))
-        # the abort path deleted every already-promoted destination: no
-        # unreferenced parquet outside the staged dirs survives
-        live = {e.file_path for e in t.entries()}
-        stray = [
-            os.path.relpath(p, t.root)
-            for d in ("data", "deletes")
-            for p in io.walk_files(os.path.join(root, d))
-            if p.endswith(".parquet")
-            and os.path.relpath(p, t.root) not in live
-        ]
-        assert stray == []
+        assert row_sets_equal(before, t.scan().select(*COLS))
+        # the write left files behind, and the reaper sees exactly those
+        left = physical_files(t) - files_before
+        assert left
+        orphans = t.remove_orphan_files(grace_seconds=0, dry_run=True)
+        assert {p for p in orphans if p.startswith(("data/", "deletes/"))} == left
+        t.remove_orphan_files(grace_seconds=0)
+        assert physical_files(t) == files_before
 
         run()
         assert t.current_snapshot_id != snap_before
-        assert row_sets_equal(expected, t.scan().select(*cols))
+        assert row_sets_equal(expected, t.scan().select(*COLS))
+
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_mid_group_commit_conflict(self, spark, tmp_table_dir, monkeypatch,
+                                       io_cls):
+        """An equality delete lands between two compaction group commits:
+        the first group stands, the later groups' output is deleted (no
+        orphan), and run_compaction re-plans and finishes on the
+        post-delete rows."""
+        monkeypatch.setattr(compact, "COMMIT_GROUP", 1)
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "mgc"), io_cls())
+        n_bins = len(compact.plan_compaction(t, TARGET, fill_ratio=1.0))
+        assert n_bins >= 2
+        before = t.scan().select(*COLS).localCheckpoint()
+        victim = before.select("image_id").orderBy("image_id").limit(1)
+
+        rewrite_files, calls = t.rewrite_files, []
+
+        def delete_before_second_group(*a, **kw):
+            calls.append(1)
+            if len(calls) == 2:
+                t.row_delta(None, victim)
+            return rewrite_files(*a, **kw)
+
+        monkeypatch.setattr(t, "rewrite_files", delete_before_second_group)
+        res = run_compaction(t, "mgc-c", fill_ratio=1.0, target_bytes=TARGET)
+
+        # group 1 committed, then every bin of the re-plan
+        assert res["bins_executed"] == 1 + res["bins_planned"]
+        assert res["bins_executed"] >= n_bins
+        expected = before.join(victim, "image_id", "left_anti")
+        assert row_sets_equal(expected, t.scan().select(*COLS))
+        assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
 
     def test_hard_crash_leftovers_are_reaped(self, spark, tmp_table_dir):
         """A hard crash (no in-process abort path) can leave promoted-but-

@@ -99,9 +99,9 @@ class TestSpecEvolution:
         )
         ids = {r["id"] for r in t.scan(columns=["id"]).collect()}
         assert ids == set(range(100))
-        # mixed directory shapes on disk
+        # mixed directory shapes on disk: data/<write job>/<partition>/file
         dirs = {
-            e.file_path.split("/")[1].split("=")[0]
+            e.file_path.split("/")[2].split("=")[0]
             for e in t.entries() if e.content == 0
         }
         assert dirs == {"_p_id_bucket4", "_p_ts_day"}
