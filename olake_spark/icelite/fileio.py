@@ -70,9 +70,10 @@ class FileIO:
     def list_dir(self, path: str) -> list[str]:
         raise NotImplementedError
 
-    def walk_files(self, root: str) -> Iterator[str]:
-        """Yield absolute paths of every file under `root` (recursive) —
-        the object-store analogue is a prefix listing."""
+    def walk_files(self, root: str) -> Iterator[tuple[str, float]]:
+        """Yield `(absolute path, mtime)` of every file under `root`
+        (recursive) — the shape of an object-store prefix listing, which
+        returns each key with its last-modified time in the same request."""
         raise NotImplementedError
 
     def makedirs(self, path: str) -> None:
@@ -92,8 +93,15 @@ class FileIO:
     def rmtree(self, path: str) -> None:
         raise NotImplementedError
 
-    def getmtime(self, path: str) -> float:
-        raise NotImplementedError
+
+def _walk_with_mtimes(root: str) -> Iterator[tuple[str, float]]:
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            p = os.path.join(dirpath, name)
+            try:
+                yield p, os.path.getmtime(p)
+            except FileNotFoundError:
+                pass  # removed between the listing and the stat
 
 
 class LocalFileIO(FileIO):
@@ -127,10 +135,8 @@ class LocalFileIO(FileIO):
     def list_dir(self, path: str) -> list[str]:
         return os.listdir(path)
 
-    def walk_files(self, root: str) -> Iterator[str]:
-        for dirpath, _dirs, files in os.walk(root):
-            for name in files:
-                yield os.path.join(dirpath, name)
+    def walk_files(self, root: str) -> Iterator[tuple[str, float]]:
+        return _walk_with_mtimes(root)
 
     def makedirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
@@ -140,9 +146,6 @@ class LocalFileIO(FileIO):
 
     def rmtree(self, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
-
-    def getmtime(self, path: str) -> float:
-        return os.path.getmtime(path)
 
 
 class ConditionalPutFileIO(LocalFileIO):
@@ -232,11 +235,9 @@ class FakeObjectStoreFileIO(FileIO):
         self._tick("list_dir")
         return os.listdir(path)
 
-    def walk_files(self, root: str) -> Iterator[str]:
+    def walk_files(self, root: str) -> Iterator[tuple[str, float]]:
         self._tick("walk_files")
-        for dirpath, _dirs, files in os.walk(root):
-            for name in files:
-                yield os.path.join(dirpath, name)
+        yield from _walk_with_mtimes(root)
 
     def makedirs(self, path: str) -> None:
         # object stores have no directories; kept real so the local data
@@ -256,7 +257,3 @@ class FakeObjectStoreFileIO(FileIO):
     def rmtree(self, path: str) -> None:
         self._tick("rmtree")
         shutil.rmtree(path, ignore_errors=True)
-
-    def getmtime(self, path: str) -> float:
-        self._tick("getmtime")
-        return os.path.getmtime(path)

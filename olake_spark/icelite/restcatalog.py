@@ -384,9 +384,6 @@ class RestCommitIO(FileIO):
     def rmtree(self, path):
         return self._base.rmtree(path)
 
-    def getmtime(self, path):
-        return self._base.getmtime(path)
-
 
 class RestCatalog:
     """Client with the same surface as `icelite.Catalog`, backed by the

@@ -133,7 +133,12 @@ class FileEntry:
 def _write_manifest(path: str, entries: list[FileEntry]) -> None:
     rows = [e.to_row() for e in entries]
     cols = {f.name: [r[f.name] for r in rows] for f in _MANIFEST_SCHEMA}
-    pq.write_table(pa.table(cols, schema=_MANIFEST_SCHEMA), path)
+    # no parquet column statistics: every reader loads the whole manifest
+    # and prunes on the parsed entries, so footer min/max copies of the
+    # *_json strings would only add bytes
+    pq.write_table(
+        pa.table(cols, schema=_MANIFEST_SCHEMA), path, write_statistics=False
+    )
 
 
 # manifest files are immutable (content-addressed by uuid name): cache their
@@ -1069,7 +1074,7 @@ class Table:
             raise
         written: list[tuple[int | None, str, dict]] = []  # (group, path, partition)
         junk: list[str] = []
-        for path in self.io.walk_files(job):
+        for path, _mtime in self.io.walk_files(job):
             if not path.endswith(".parquet"):
                 junk.append(path)
                 continue
@@ -2416,7 +2421,7 @@ class Table:
         stats_dir = os.path.join(self.root, "metadata", "stats")
         victims = [
             p
-            for p in self.io.walk_files(stats_dir)
+            for p, _mtime in self.io.walk_files(stats_dir)
             if os.path.relpath(p, self.root) not in refd
         ]
         if victims:
@@ -2445,8 +2450,10 @@ class Table:
         walk bounded by DISTRIBUTED_LIST_THRESHOLD files, else a Spark listing
         job — one task per first-level (write-job) directory, each executor
         listing its own prefix with mtimes, the object-store pattern. Either
-        way the deletion is ONE batched remove_many call, so driver FileIO
-        work stays O(1) calls no matter how many orphans exist."""
+        way the grace check reads the mtimes the listing returned and the
+        deletion is ONE batched remove_many call, so driver FileIO work stays
+        O(1) calls no matter how many orphans exist. Write-job directories
+        the deletion empties are removed with it; the listing roots stay."""
         self.refresh()
         referenced: set[str] = set()
         for s in self.meta["snapshots"]:
@@ -2460,12 +2467,12 @@ class Table:
             for sub in ("data", "deletes", os.path.join("metadata", "manifests"))
         ]
 
-        listing: list[tuple[str, float | None]] = []
+        listing: list[tuple[str, float]] = []
         if distributed is not True:
             overflow = False
             for base in roots:
-                for p in self.io.walk_files(base):
-                    listing.append((p, None))  # mtime fetched lazily below
+                for item in self.io.walk_files(base):
+                    listing.append(item)
                     if (
                         distributed is None
                         and len(listing) > self.DISTRIBUTED_LIST_THRESHOLD
@@ -2485,60 +2492,74 @@ class Table:
             rel = os.path.relpath(p, self.root)
             if rel in referenced:
                 continue
-            if (mtime if mtime is not None else self.io.getmtime(p)) > cutoff:
+            if mtime > cutoff:
                 continue
             orphans.append(rel)
             victims.append(p)
         if victims and not dry_run:
             self.io.remove_many(victims)
+            _remove_emptied_dirs(victims, roots)
         return sorted(orphans)
 
 
 # ------------------------------------------------------------------ helpers
 
 
+def _remove_emptied_dirs(removed: list[str], roots: list[str]) -> None:
+    """Remove the write-job directories that deleting `removed` left empty,
+    walking up from each file's directory to the first non-empty one. The
+    walk stops below the listing root that holds the file, so data/,
+    deletes/ and metadata/manifests/ themselves always stay: writers put
+    files into them without creating them first. An object store has no
+    directories; there the rmdir finds nothing and the walk stops."""
+    for d in sorted({os.path.dirname(p) for p in removed}, reverse=True):
+        root = next((r for r in roots if d.startswith(r + os.sep)), None)
+        while root is not None and d.startswith(root + os.sep):
+            try:
+                os.rmdir(d)
+            except OSError:  # not empty, or already gone
+                break
+            d = os.path.dirname(d)
+
+
 def _list_files_spark(
     spark: SparkSession, io: FileIO, roots: list[str]
 ) -> list[tuple[str, float]]:
     """Distributed prefix listing for orphan reaping: the driver enumerates
-    only FIRST-level entries (write-job directories) through the FileIO; each
-    executor task then walks one subtree and returns (path, mtime). In local
-    mode tasks share the filesystem; on a deployment each executor lists its
-    own object-store prefix — driver work is O(first-level dirs), never
-    O(files)."""
-    units: list[str] = []
-    out: list[tuple[str, float]] = []
-    for r in roots:
-        if not os.path.isdir(r):
-            continue
-        for name in io.list_dir(r):
-            p = os.path.join(r, name)
-            if os.path.isdir(p):
-                units.append(p)
-            else:
-                try:
-                    out.append((p, io.getmtime(p)))
-                except OSError:
-                    pass
-    if units:
+    only FIRST-level entries (write-job directories, and any file placed
+    directly under a root) through one list_dir per root; each executor task
+    then lists one entry — a subtree walk, or a single file — and returns
+    (path, mtime). In local mode tasks share the filesystem; on a deployment
+    each executor lists its own object-store prefix — driver work is
+    O(first-level entries), never a request per file."""
+    units = [
+        os.path.join(r, name)
+        for r in roots
+        if os.path.isdir(r)
+        for name in io.list_dir(r)
+    ]
+    if not units:
+        return []
 
-        def walk(d: str) -> list[tuple[str, float]]:
-            import os as _os
+    def walk(top: str) -> list[tuple[str, float]]:
+        import os as _os
 
-            res = []
-            for dirpath, _dirs, files in _os.walk(d):
-                for f in files:
-                    p = _os.path.join(dirpath, f)
-                    try:
-                        res.append((p, _os.path.getmtime(p)))
-                    except OSError:
-                        pass
-            return res
+        paths = (
+            [_os.path.join(d, f) for d, _dirs, files in _os.walk(top) for f in files]
+            if _os.path.isdir(top)
+            else [top]
+        )
+        res = []
+        for p in paths:
+            try:
+                res.append((p, _os.path.getmtime(p)))
+            except OSError:
+                pass  # removed between the listing and the stat
+        return res
 
-        sc = spark.sparkContext
-        n = max(1, min(len(units), sc.defaultParallelism * 2))
-        out += sc.parallelize(units, n).flatMap(walk).collect()
-    return out
+    sc = spark.sparkContext
+    n = max(1, min(len(units), sc.defaultParallelism * 2))
+    return sc.parallelize(units, n).flatMap(walk).collect()
 
 
 def uri_path(uri: Column) -> Column:

@@ -47,7 +47,10 @@ cluster                   opt-in via ``cluster.curve``; fires when rows
                           in data files sequenced after the last
                           ``cluster`` commit reach
                           ``cluster.max-unclustered-ppm`` of the table.
-manifests                 live manifest count > ``manifests.max-count``.
+manifests                 live manifest count > ``manifests.max-count``
+                          and > the ceil(live entries /
+                          ``manifests.target-entries``) a rewrite
+                          packs them into.
 bloom                     opt-in via ``bloom.columns``; fires when live
                           rows in data files the registered index does
                           not cover reach ``bloom.max-stale-ppm`` (a
@@ -284,14 +287,21 @@ def plan_maintenance(
             },
         })
 
-    if h["manifests"] > int(pol["manifests.max-count"]):
+    # a rewrite packs the live entries into ceil(entries / target)
+    # manifests; past that count it has nothing left to merge, so the
+    # trigger settles after one run even on a table too big for max-count
+    mf_target = int(pol["manifests.target-entries"])
+    mf_entries = h["data_files"] + h["pos_delete_files"] + h["eq_delete_files"]
+    if h["manifests"] > max(
+        int(pol["manifests.max-count"]), -(-mf_entries // mf_target)
+    ):
         actions.append({
             "op": "manifests",
             "reason": (
                 f"{h['manifests']} manifests "
                 f"(max {pol['manifests.max-count']})"
             ),
-            "params": {"target_entries": int(pol["manifests.target-entries"])},
+            "params": {"target_entries": mf_target},
         })
 
     bloom_cols = tuple(pol.get("bloom.columns") or ())

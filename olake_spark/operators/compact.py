@@ -340,6 +340,7 @@ def _run_bulk(
         group = list(enumerate(todo))[g : g + COMMIT_GROUP]
         removed = {f.file_path for _, b in group for f in b.files}
         added = [e for i, _ in group for e in per_bin.get(i, [])]
+        committed = False
         try:
             snap = table.rewrite_files(
                 removed, added, op="compact",
@@ -350,41 +351,50 @@ def _run_bulk(
                 seq_used=seq,
                 known_delete_paths=pinned_delete_paths,
             )
-        except CommitConflict as ce:
-            # earlier groups are committed (and logged); this group and every
-            # later one are not. Delete their already-written output files so
-            # the abort leaves zero orphans (ONE batched FileIO call), then
-            # propagate — run_compaction re-plans from fresh metadata and
-            # redoes the remaining bins. The committed groups' counts ride on the
-            # exception so the caller's summary stays accurate.
+            committed = True
+            executed += len(group)
+            rows_out += sum(e.record_count for e in added)
+            bytes_out += sum(e.file_size_bytes for e in added)
+            if log is not None:
+                log.log_done_many(
+                    job_id, "compact",
+                    [
+                        {"chunk_id": b.chunk_id, "partition": b.partition_json,
+                         "rows": b.total_rows, "bytes_in": b.total_bytes,
+                         "bytes_out": sum(
+                             e.file_size_bytes for e in per_bin.get(i, [])
+                         ),
+                         "snapshot_before": pin_snapshot,
+                         "snapshot_after": snap.get("snapshot_id")}
+                        for i, b in group
+                    ],
+                )
+        except BaseException as exc:
+            # earlier groups are committed; every later group is not. This
+            # group is uncommitted only if its own commit raised
+            # CommitConflict: once rewrite_files returned, the table
+            # references its output (the maintenance log is a table too, so
+            # a failed log append can raise CommitConflict as well), and any
+            # other failure inside rewrite_files may have landed the commit,
+            # so its output stays for the reaper if it is unreferenced.
+            # Delete the surely-uncommitted output (ONE batched FileIO call)
+            # and propagate — a rerun or run_compaction's re-plan redoes those
+            # bins from fresh metadata; the committed groups' counts ride on a
+            # conflict so the caller's summary stays accurate.
+            conflict = isinstance(exc, CommitConflict)
+            first = g if conflict and not committed else g + len(group)
             victims = [
                 table._abs(e.file_path)
-                for i in range(g, len(todo))
+                for i in range(first, len(todo))
                 for e in per_bin.get(i, [])
             ]
             try:
                 table.io.remove_many(victims)
             except OSError:
                 pass  # best effort; the reaper collects stragglers
-            ce.partial = (executed, rows_out, bytes_out)
+            if conflict:
+                exc.partial = (executed, rows_out, bytes_out)
             raise
-        executed += len(group)
-        rows_out += sum(e.record_count for e in added)
-        bytes_out += sum(e.file_size_bytes for e in added)
-        if log is not None:
-            log.log_done_many(
-                job_id, "compact",
-                [
-                    {"chunk_id": b.chunk_id, "partition": b.partition_json,
-                     "rows": b.total_rows, "bytes_in": b.total_bytes,
-                     "bytes_out": sum(
-                         e.file_size_bytes for e in per_bin.get(i, [])
-                     ),
-                     "snapshot_before": pin_snapshot,
-                     "snapshot_after": snap.get("snapshot_id")}
-                    for i, b in group
-                ],
-            )
     return {
         "bins_executed": executed,
         "rows_rewritten": rows_out,

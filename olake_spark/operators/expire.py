@@ -9,9 +9,14 @@ re-implemented over icelite metadata (SURVEY.md §7 step 6):
   only — instant, atomic.
 - `remove_orphan_files`: diff the physical listing under data/ deletes/
   metadata/manifests/ against the union of files referenced by RETAINED
-  snapshots; delete unreferenced files older than `grace_seconds` (files
+  snapshots (every manifest of every retained snapshot is read: their
+  number and size, not how entries are split among them, is what the
+  reap pays); delete unreferenced files older than `grace_seconds` (files
   inside the grace window may belong to an in-flight, not-yet-committed
-  write — never touch them).
+  write — never touch them). The grace check reads the mtime each listing
+  entry carries, so the reap issues no per-file request; a write-job
+  directory the reap empties goes too (data/, deletes/ and
+  metadata/manifests/ themselves always stay).
 
 At deployment scale the physical listing is a distributed object-store list
 job; the reconciliation is the same set difference.

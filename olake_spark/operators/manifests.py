@@ -3,14 +3,17 @@
 
 The reference gets per-file stats for free from Iceberg's
 GenericAppenderFactory metrics config (IcebergUtil.java:234-253) and never
-reorganizes manifests. At 10^12-image scale manifest organization IS the
-planning bottleneck: a scan that must read every manifest to prune by
-partition or phash range pays O(total files). This operator:
+reorganizes manifests. Every reader (`Table.entries`) loads every manifest
+of a snapshot and prunes on the parsed per-file entries, so what a plan
+pays for is the number and size of manifests, not how entries are split
+among them. This operator:
 
-1. groups the current snapshot's live entries by partition value, ordered by
-   (partition, min phash), and packs them into manifests of ≈`target_entries`
-   — so partition pruning touches only the manifests of matching partitions
-   and phash-range pruning benefits from clustered min/max runs;
+1. packs the current snapshot's live entries into
+   `ceil(entries / target_entries)` manifests, whatever the partitions,
+   ordered by (partition, content, min phash, path) — each partition stays
+   one contiguous run inside and across manifests, and phash-range runs
+   stay clustered. A per-partition split would only multiply files: with
+   no partition summary in the manifest list, no reader could skip one;
 2. optionally **audits** stats by re-reading parquet footers (driver-side
    pyarrow, no data read) and comparing against manifest values — the
    verification demanded by SURVEY.md §7 step 7;
@@ -38,15 +41,11 @@ def _group_entries(
             e.file_path,
         )
 
-    groups: list[list[FileEntry]] = []
-    cur_part = object()
-    for e in sorted(entries, key=sort_key):
-        pj = json.dumps(e.partition, sort_keys=True)
-        if pj != cur_part or len(groups[-1]) >= target_entries:
-            groups.append([])
-            cur_part = pj
-        groups[-1].append(e)
-    return groups
+    ordered = sorted(entries, key=sort_key)
+    return [
+        ordered[i : i + target_entries]
+        for i in range(0, len(ordered), target_entries)
+    ]
 
 
 def rewrite_manifests(

@@ -817,7 +817,7 @@ def add_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.add_files(lake)
         data_dir = os.path.join(t.root, "data")
         owned = (
-            [p for p in t.io.walk_files(data_dir) if p.endswith(".parquet")]
+            [p for p, _ in t.io.walk_files(data_dir) if p.endswith(".parquet")]
             if os.path.isdir(data_dir)
             else []
         )

@@ -32,7 +32,9 @@ def table(spark, tmp_table_dir):
 
 
 def _stats_files(t):
-    return sorted(t.io.walk_files(os.path.join(t.root, "metadata", "stats")))
+    return sorted(
+        p for p, _ in t.io.walk_files(os.path.join(t.root, "metadata", "stats"))
+    )
 
 
 class TestAnalyze:

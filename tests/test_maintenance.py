@@ -322,24 +322,100 @@ class TestMerge:
         assert row_sets_equal(before, t.scan().select("image_id", "caption"))
 
 
+def _manifest_partitions(t) -> list[list[str]]:
+    """Partition keys of the current snapshot's entries, per manifest, in
+    manifest-list and in-manifest order."""
+    from olake_spark.icelite.table import _read_manifest
+
+    return [
+        [json.dumps(e.partition, sort_keys=True) for e in _read_manifest(t._abs(m))]
+        for m in t.snapshot()["manifests"]
+    ]
+
+
+def _assert_packed(t, n_entries: int, target: int) -> None:
+    """ceil(entries / target) manifests, every one full but the last, and
+    each partition value one contiguous run across the manifest list."""
+    per_manifest = _manifest_partitions(t)
+    assert len(per_manifest) == math.ceil(n_entries / target)
+    assert [len(p) for p in per_manifest[:-1]] == [target] * (len(per_manifest) - 1)
+    flat = [k for p in per_manifest for k in p]
+    assert len(flat) == n_entries
+    runs = [k for i, k in enumerate(flat) if i == 0 or k != flat[i - 1]]
+    assert len(runs) == len(set(runs))
+
+
 class TestManifestRewrite:
-    def test_rewrite_groups_by_partition_and_audits(self, fragmented_table):
+    def test_rewrite_packs_across_partitions_and_audits(self, fragmented_table):
         t = fragmented_table
         before = t.scan().select("image_id", "phash")
+        n_entries = len(t.entries())
         res = rewrite_manifests(t, target_entries=10, audit=True)
         assert res["audited"] > 0
-        assert res["manifests_after"] >= 2  # ≥ one per partition value
+        assert res["manifests_after"] == math.ceil(n_entries / 10)
+        _assert_packed(t, n_entries, 10)
         assert row_sets_equal(before, t.scan().select("image_id", "phash"))
-        # each manifest now holds exactly one partition value
-        snap = t.snapshot()
-        from olake_spark.icelite.table import _read_manifest
 
-        for m in snap["manifests"]:
-            parts = {
-                json.dumps(e.partition, sort_keys=True)
-                for e in _read_manifest(t._abs(m))
-            }
-            assert len(parts) == 1
+    def test_packing_settles_the_autopilot(self, spark, tmp_table_dir):
+        """24 buckets, 3 appends: one manifests action leaves
+        ceil(entries / target) manifests — not one per bucket — and the
+        autopilot stops scheduling manifest rewrites."""
+        from olake_spark.operators.autopilot import (_run_action,
+                                                     plan_maintenance)
+
+        t = Table.create(
+            spark, os.path.join(tmp_table_dir, "mf24"), datagen.IMAGES_SCHEMA,
+            PartitionSpec((PartitionField("image_id", "bucket", 24),)),
+            identifier_fields=("image_id",),
+        )
+        for k in range(3):
+            t.append(
+                datagen.gen_images_df(spark, 40).withColumn(
+                    "image_id", F.concat(F.lit(f"a{k}-"), F.col("image_id"))
+                ),
+                max_records_per_file=2,
+            )
+        before = t.scan().select("image_id", "phash").localCheckpoint()
+        n_entries = len(t.entries())
+        assert n_entries > 24 and len(t.snapshot()["manifests"]) == 3
+
+        def manifest_actions(policy):
+            return [a for a in plan_maintenance(t, policy) if a["op"] == "manifests"]
+
+        pol = {"manifests.max-count": 2}
+        (act,) = manifest_actions(pol)
+        res = _run_action(t, "mf24", act, None, False)
+        assert res["manifests_after"] == 1
+        assert manifest_actions(pol) == []
+
+        # a table bigger than max-count × target: one rewrite to
+        # ceil(entries / target) manifests, then nothing left to schedule
+        res = rewrite_manifests(t, target_entries=7)
+        assert res["manifests_after"] == math.ceil(n_entries / 7) > 2
+        _assert_packed(t, n_entries, 7)
+        assert manifest_actions({**pol, "manifests.target-entries": 7}) == []
+        assert row_sets_equal(before, t.scan().select("image_id", "phash"))
+
+    def test_manifest_written_without_column_stats(self, tmp_path):
+        import pyarrow.parquet as pq
+
+        from olake_spark.icelite.table import _read_manifest, _write_manifest
+
+        entries = [
+            FileEntry(DATA, f"data/f{i}.parquet", {"b": str(i % 3)}, 1, 10, 100,
+                      {"phash": i}, {"phash": i + 5}, {"phash": 0})
+            for i in range(6)
+        ]
+        path = str(tmp_path / "mf.parquet")
+        _write_manifest(path, entries)
+        md = pq.ParquetFile(path).metadata
+        cols = [
+            md.row_group(g).column(c)
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        ]
+        assert cols and not any(c.is_stats_set for c in cols)
+        assert _read_manifest(path) == entries
 
 
 class TestExpireAndOrphans:

@@ -6,8 +6,9 @@ guarantees on top of it, the way the reference holds them on S3FileIO
 (iceberg_utils.go:197-260). Written files are registered where Spark's
 commit left them, so a crash between write and commit leaves only
 unreferenced files for the orphan reaper. Also pins the bounded-driver-work
-contract: writes and orphan reaps issue O(1) FileIO calls (one walk_files,
-one remove_many), never per-file loops.
+contract: writes and orphan reaps issue O(1) FileIO calls (one walk_files
+whose listing carries each file's mtime, one remove_many), never per-file
+loops; and a reap leaves no empty write-job directory behind.
 
 The FULL suite runs under these semantics via `OLAKE_FILEIO=objectstore
 python -m pytest tests/` (default FileIO switch in icelite.fileio.default_io).
@@ -22,12 +23,13 @@ from olake_spark import datagen
 from olake_spark.checkpoint import MaintenanceLog
 from olake_spark.icelite import (FakeObjectStoreFileIO, LocalFileIO,
                                  PartitionField, PartitionSpec, Table)
-from olake_spark.icelite.table import DATA
+from olake_spark.icelite.table import DATA, CommitConflict
 from olake_spark.operators import compact
 from olake_spark.operators.cluster import run_cluster_rewrite
 from olake_spark.operators.compact import (rewrite_position_deletes,
                                            run_compaction)
 from olake_spark.operators.merge import merge_into
+from olake_spark.streaming.table_sink import write_table_stream
 from olake_spark.sync import backfill
 from olake_spark.verify import row_sets_equal
 
@@ -62,6 +64,17 @@ def physical_files(t) -> set[str]:
         for d, _dirs, files in os.walk(os.path.join(t.root, sub))
         for f in files
     }
+
+
+def _assert_no_empty_dirs(t) -> None:
+    """No directory below data/ or deletes/ is empty."""
+    for sub in ("data", "deletes"):
+        top = os.path.join(t.root, sub)
+        empty = [
+            d for d, dirs, files in os.walk(top)
+            if d != top and not dirs and not files
+        ]
+        assert empty == [], empty
 
 
 def new_rows(spark):
@@ -149,6 +162,94 @@ class TestObjectStoreFlow:
         after = t.remove_orphan_files(grace_seconds=0, dry_run=True)
         assert after == []
         assert t.scan().count() == N
+
+    def test_reap_requests_independent_of_orphan_count(self, spark,
+                                                       tmp_table_dir):
+        """The grace check reads the mtimes the listing returned: a reap
+        that finds 30 orphans issues exactly the requests of one that finds
+        1 — no per-file stat."""
+        io = FakeObjectStoreFileIO()
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "req"), io, n_files=10)
+        requests = []
+        for k in (1, 30):
+            job = os.path.join(t.root, "data", f"999999-stray{k}", "b=0")
+            os.makedirs(job)
+            for i in range(k):
+                with open(os.path.join(job, f"f{i}.parquet"), "wb") as f:
+                    f.write(b"PAR1junkPAR1")
+            io.counts.clear()
+            assert len(t.remove_orphan_files(grace_seconds=0)) == k
+            requests.append(dict(io.counts))
+            # the emptied write-job tree went with its last file
+            assert not os.path.exists(os.path.dirname(job))
+        assert requests[0] == requests[1]
+        assert t.scan().count() == N
+
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_reap_leaves_no_empty_directories(self, spark, tmp_table_dir,
+                                              io_cls):
+        """Appends, a delete, a compaction that applies it, expire, reap: no
+        emptied write-job directory is left under data/ or deletes/, yet
+        both stay although the reap took every file out of deletes/ — a
+        streaming upsert, whose writers put files straight into them, still
+        commits."""
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "dirs"), io_cls(),
+                      n_files=10)
+        for k in range(2):
+            t.append(
+                new_rows(spark).withColumn(
+                    "image_id", F.concat(F.lit(f"x{k}-"), F.col("image_id"))
+                ),
+                max_records_per_file=4,
+            )
+        t.delete_where("cast(substring(image_id, -12, 12) as bigint) % 9 = 0")
+        rows = t.scan().select(*COLS).localCheckpoint()
+        run_compaction(t, "dirs-c", fill_ratio=1.0, target_bytes=TARGET)
+        t.expire_snapshots(keep_last=1)
+        reaped = t.remove_orphan_files(grace_seconds=0)
+        assert any(p.startswith("deletes/") for p in reaped)
+        assert all(e.content == DATA for e in t.entries())
+        assert not any(p.startswith("deletes/") for p in physical_files(t))
+        _assert_no_empty_dirs(t)
+        assert row_sets_equal(rows, t.scan().select(*COLS))
+
+        feed = os.path.join(tmp_table_dir, "dirs-feed")
+        upd = (
+            datagen.gen_images_df(spark, 6)
+            .filter(F.col("image_id") > f"img-{0:012d}")
+            .withColumn("caption", F.lit("upserted"))
+        )  # keys img-1..5, all live (the delete took img-0)
+        upd.write.parquet(feed)
+        q = write_table_stream(
+            spark.readStream.schema(datagen.IMAGES_SCHEMA).parquet(feed),
+            t.root, os.path.join(tmp_table_dir, "dirs-ckpt"),
+            txn_app="dirs", mode="upsert",
+        )
+        q.awaitTermination(180)
+        t.refresh()
+        got = t.scan().select(*COLS)
+        assert got.count() == rows.count()
+        assert got.filter(F.col("caption") == "upserted").count() == 5
+
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_truncate_reap_then_append(self, spark, tmp_table_dir, io_cls):
+        """truncate, expire and reap unreference and delete every data file
+        and manifest; data/, deletes/ and metadata/manifests/ stay, so the
+        next append writes its files and manifest into them."""
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "trunc"), io_cls(),
+                      n_files=10)
+        t.truncate()
+        t.expire_snapshots(keep_last=1)
+        reaped = t.remove_orphan_files(grace_seconds=0)
+        assert any(p.startswith("data/") for p in reaped)
+        assert any(p.startswith(os.path.join("metadata", "manifests")) for p in reaped)
+        for sub in ("data", "deletes", os.path.join("metadata", "manifests")):
+            assert os.path.isdir(os.path.join(t.root, sub)), sub
+        assert physical_files(t) == set()
+        _assert_no_empty_dirs(t)
+        added = new_rows(spark)
+        t.append(added, max_records_per_file=10)
+        assert row_sets_equal(added.select(*COLS), t.scan().select(*COLS))
 
     def test_local_and_distributed_listings_agree(self, spark, tmp_table_dir):
         t = _mk_table(spark, os.path.join(tmp_table_dir, "agree"),
@@ -256,6 +357,86 @@ class TestFaultAfterWrite:
         assert res["bins_executed"] >= n_bins
         expected = before.join(victim, "image_id", "left_anti")
         assert row_sets_equal(expected, t.scan().select(*COLS))
+        assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
+
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_kill_between_group_commit_and_log(self, spark, tmp_table_dir,
+                                               monkeypatch, io_cls):
+        """Kill a compaction after its first group's commit, before that
+        group's maintenance-log append: the later groups' output is deleted,
+        and a rerun of the same job keeps the row set, leaves no orphan and
+        redoes none of the committed group's bins (their source files are
+        gone from the table, so no re-plan can hold them). The rerun runs
+        exactly the fresh plan, which at fill_ratio=1.0 may pack the
+        committed group's output with its partition's leftovers, as the
+        re-plan after any interrupted run does."""
+        monkeypatch.setattr(compact, "COMMIT_GROUP", 1)
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "klog"), io_cls())
+        n_bins = len(compact.plan_compaction(t, TARGET, fill_ratio=1.0))
+        assert n_bins >= 2
+        before = t.scan().select(*COLS).localCheckpoint()
+        live_before = {e.file_path for e in data_files(t)}
+        log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "log"))
+
+        def crash(*_a, **_kw):
+            raise OSError("injected crash before the log append")
+
+        with monkeypatch.context() as m:
+            m.setattr(log, "log_done_many", crash)
+            with pytest.raises(OSError, match="injected crash"):
+                run_compaction(t, "klog-c", log=log, fill_ratio=1.0,
+                               target_bytes=TARGET)
+        t.refresh()
+        snap = t.snapshot()
+        assert snap["operation"] == "compact"
+        committed_chunks = set(snap["summary"]["chunk_ids"])
+        consumed = live_before - {e.file_path for e in data_files(t)}
+        assert len(committed_chunks) == 1 and consumed
+        assert log.done_chunk_ids("klog-c") == set()
+        assert all(os.path.exists(t._abs(e.file_path)) for e in t.entries())
+        assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
+        replan = compact.plan_compaction(t, TARGET, fill_ratio=1.0)
+        assert not {b.chunk_id for b in replan} & committed_chunks
+
+        res = run_compaction(t, "klog-c", log=log, fill_ratio=1.0,
+                             target_bytes=TARGET)
+        assert res["bins_executed"] == len(replan)
+        redone = log.done_chunk_ids("klog-c")
+        assert redone and not redone & committed_chunks
+        assert not consumed & {e.file_path for e in data_files(t)}
+        assert row_sets_equal(before, t.scan().select(*COLS))
+        assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
+
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_log_append_conflict_keeps_committed_output(
+        self, spark, tmp_table_dir, monkeypatch, io_cls
+    ):
+        """The maintenance log is a table: its append can give up with
+        CommitConflict after the group's data commit has landed. That
+        group's output is then referenced by the table and must stay; only
+        the later groups' output is deleted, and run_compaction's re-plan
+        finishes the job with the row set unchanged."""
+        monkeypatch.setattr(compact, "COMMIT_GROUP", 1)
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "kcf"), io_cls())
+        assert len(compact.plan_compaction(t, TARGET, fill_ratio=1.0)) >= 2
+        before = t.scan().select(*COLS).localCheckpoint()
+        log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "log"))
+        log_done_many = log.log_done_many
+        calls = []
+
+        def conflict_once(*a, **kw):
+            calls.append(a)
+            if len(calls) == 1:
+                raise CommitConflict("gave up after 20 commit attempts")
+            return log_done_many(*a, **kw)
+
+        monkeypatch.setattr(log, "log_done_many", conflict_once)
+        res = run_compaction(t, "kcf-c", log=log, fill_ratio=1.0,
+                             target_bytes=TARGET)
+        assert len(calls) >= 2 and res["bins_executed"] >= 2
+        t.refresh()
+        assert all(os.path.exists(t._abs(e.file_path)) for e in t.entries())
+        assert row_sets_equal(before, t.scan().select(*COLS))
         assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
 
     def test_hard_crash_leftovers_are_reaped(self, spark, tmp_table_dir):
