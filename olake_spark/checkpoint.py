@@ -119,9 +119,15 @@ class MaintenanceLog:
         )
 
     def done_chunk_ids(self, job_id: str) -> set[str]:
+        return self._chunk_ids(job_id, "done")
+
+    def planned_chunk_ids(self, job_id: str) -> set[str]:
+        return self._chunk_ids(job_id, "planned")
+
+    def _chunk_ids(self, job_id: str, status: str) -> set[str]:
         df = self.table.scan(columns=["job_id", "chunk_id", "status"])
         rows = (
-            df.filter((df.job_id == job_id) & (df.status == "done"))
+            df.filter((df.job_id == job_id) & (df.status == status))
             .select("chunk_id")
             .collect()
         )

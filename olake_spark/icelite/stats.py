@@ -6,6 +6,13 @@ stats Iceberg's GenericAppenderFactory emits into manifests
 metadata-only I/O, a few KB per file. For large commits the harvest is
 distributed over executors via an RDD map (driver never becomes the
 bottleneck at 10^12-row scale); small commits take the driver fast path.
+
+Binary columns carry no bounds, and since data files are written without
+parquet statistics on them (`unstated_columns`) they carry no null count
+either: a manifest entry has no `mins` / `maxs` / `null_counts` key for a
+top-level binary column, and an Iceberg export no `null_value_counts` entry.
+Pruning reads only mins/maxs (`table._may_match`) and `analyze_table` counts
+nulls from the data, so no reader loses anything.
 """
 
 from __future__ import annotations
@@ -17,10 +24,25 @@ from typing import Any
 _DISTRIBUTE_THRESHOLD = 512  # files; above this, harvest on executors
 
 
+def unstated_columns(schema) -> list[str]:
+    """Top-level columns a data file is written WITHOUT parquet statistics:
+    the binary ones. A binary bound is never harvested (`_encode`), yet a
+    parquet writer stores the full min and max value in every row group's
+    footer (parquet-mr caps each at 4 KB) — on an image table, two image
+    payloads per footer that every later footer read pays for. `schema` is
+    the Spark StructType being written."""
+    from pyspark.sql.types import BinaryType
+
+    return [f.name for f in schema.fields if isinstance(f.dataType, BinaryType)]
+
+
 def _encode(v: Any) -> Any:
     """JSON-encodable canonical form for a stat value."""
     if isinstance(v, bytes):
-        return None  # binary stats skipped (Iceberg truncates these too)
+        # no binary bounds: data files are written without them
+        # (`unstated_columns`); a file from elsewhere (add_files) may have
+        # them, and they are dropped here
+        return None
     if isinstance(v, (_dt.datetime, _dt.date)):
         return v.isoformat()
     if isinstance(v, float) and (v != v):  # NaN

@@ -48,7 +48,7 @@ from pyspark.sql.types import (BooleanType, IntegerType, LongType,
 
 from olake_spark.icelite.fileio import FileIO, default_io
 from olake_spark.icelite.spec import PartitionSpec
-from olake_spark.icelite.stats import collect_file_stats
+from olake_spark.icelite.stats import collect_file_stats, unstated_columns
 
 DATA = 0
 POS_DELETES = 1  # Iceberg v2 positional deletes: rows of (file_path, pos)
@@ -1037,6 +1037,10 @@ class Table:
             "write.parquet.compression-codec", "snappy"
         )
         w = out.write.mode("overwrite").option("compression", codec)
+        # per write, not session-wide: Spark copies write options into the
+        # job's Hadoop conf, which parquet-mr reads per column
+        for col in unstated_columns(out.schema):
+            w = w.option(f"parquet.column.statistics.enabled#{col}", "false")
         if max_records_per_file:
             w = w.option("maxRecordsPerFile", max_records_per_file)
         if lead or spec.fields:

@@ -15,7 +15,8 @@ ingest inevitably leaves small files. This operator:
    COMMIT_GROUP bins per snapshot;
 4. logs per-chunk lineage to the maintenance log; a rerun with the same
    job_id skips bins already logged done (idempotent resume — the analogue of
-   state.RemoveChunk, types/state.go:187-230).
+   state.RemoveChunk, types/state.go:187-230), and keeps the output of its
+   own commits that a kill left unlogged out of the re-plan.
 
 Each task holds one bin — at 10^12-image scale no task ever holds more than
 ~target bytes of encoded pixels.
@@ -199,6 +200,7 @@ def plan_compaction(
     min_files_per_bin: int = 2,
     snapshot_id: int | None = None,
     predicates: list[tuple[str, str, object]] | None = None,
+    exclude: set[str] | frozenset[str] = frozenset(),
 ) -> list[Bin]:
     """Size-tiered first-fit-decreasing bin packing per partition.
 
@@ -207,6 +209,11 @@ def plan_compaction(
     whole files, never row subsets, exactly Iceberg's file-level semantics.
     At deployment scale this is what keeps nightly maintenance bounded: the
     10^12-row table compacts yesterday's partitions, not its whole history.
+
+    `exclude` names data files that are never candidates (a resumed job's
+    own committed output). Files are packed one by one in a fixed order, so
+    on an otherwise unchanged table, leaving out whole bins' files yields
+    the other bins of the same plan.
     """
     if target_bytes is None:
         target_bytes = table.target_file_size
@@ -229,7 +236,7 @@ def plan_compaction(
     per_part: dict[str, list[FileEntry]] = {}
     burdened: set[str] = set()
     for e in entries:
-        if e.content != DATA:
+        if e.content != DATA or e.file_path in exclude:
             continue
         is_burdened = e.seq < max_del_seq
         if e.file_size_bytes <= small_cut or is_burdened:
@@ -402,6 +409,36 @@ def _run_bulk(
     }
 
 
+def _unlogged_output(
+    table: Table, job_id: str, log: MaintenanceLog, done: set[str]
+) -> set[str]:
+    """Resume after a kill between a group's commit and its log append: the
+    live data files written by this job's `compact` snapshots whose chunks
+    the log has not marked done, for the re-plan to leave out (at a high
+    fill ratio that output is itself small, and would be packed again with
+    its partition's leftovers). Those chunks count as done. Empty when every
+    planned chunk of the job is done or committed: such a job plans from
+    scratch, because a job id may be reused for a later run."""
+    unlogged = [
+        s for s in table.snapshots()
+        if s.get("operation") == "compact"
+        and s["summary"].get("job_id") == job_id
+        and not set(s["summary"].get("chunk_ids", ())) <= done
+    ]
+    if not unlogged:
+        return set()
+    committed = {c for s in unlogged for c in s["summary"]["chunk_ids"]}
+    if not log.planned_chunk_ids(job_id) - done - committed:
+        return set()
+    # a run stamps every group's output with one sequence number, so this
+    # also keeps out the output of that run's groups that were logged
+    seqs = {s["sequence_number"] for s in unlogged}
+    return {
+        e.file_path for e in table.entries()
+        if e.content == DATA and e.seq in seqs
+    }
+
+
 def run_compaction(
     table: Table,
     job_id: str,
@@ -465,10 +502,13 @@ def run_compaction(
         # conflict instead (ADVICE round 1; Iceberg's
         # RewriteFiles.validateNoNewDeleteFiles semantics)
         pin_snapshot = table.current_snapshot_id
-        bins = plan_compaction(table, target_bytes, fill_ratio, predicates=predicates)
+        done = log.done_chunk_ids(job_id) if log is not None else set()
+        own = _unlogged_output(table, job_id, log, done) if log is not None else set()
+        bins = plan_compaction(
+            table, target_bytes, fill_ratio, predicates=predicates, exclude=own
+        )
         if max_bins:
             bins = bins[:max_bins]
-        done = log.done_chunk_ids(job_id) if log is not None else set()
         todo = [b for b in bins if b.chunk_id not in done]
         if attempt == 0:
             skipped = len(bins) - len(todo)

@@ -8,7 +8,9 @@ Under a `local[...]` master the Python workers run `olake_spark.pydaemon`
 instead of `pyspark.daemon`. On Python < 3.12 every task otherwise spends
 0.13-0.20 s of CPU (4-vCPU box, Python 3.11.7, Spark 4.1.2) re-reading the
 central directory of each zip on the worker path
-(`importlib.invalidate_caches()` before each task, CPython gh-103200). Only
+(`importlib.invalidate_caches()` before each task, CPython gh-103200), and
+a reused worker's per-task `gc.collect()` walks every object its imports
+made (27-32 ms a task); the daemon freezes those before the second task. Only
 local mode gets it: there the workers share the driver's filesystem, so
 they can import the daemon from the directory that holds `olake_spark`,
 which get_spark prepends to their PYTHONPATH. Executors that receive the

@@ -15,7 +15,9 @@ Execution shape (the Iceberg sink's, executor-driven):
     straight into ONE parquet file per task under the table's data/
     directory (no staging hop, no driver bytes), and the file's
     min/max/null manifest stats are harvested from its footer in the same
-    task — zero extra jobs, zero driver I/O.
+    task — zero extra jobs, zero driver I/O. Like every icelite data file,
+    it has no parquet statistics on binary columns
+    (`icelite.stats.unstated_columns`).
   * ``commit`` runs once per micro-batch on the driver: one atomic
     metadata-only snapshot commit registering every task's file. The commit
     carries ``txn=(txn_app, batchId)`` — the idempotent-writer transaction
@@ -59,8 +61,24 @@ from pyspark.sql.datasource import (DataSource, DataSourceStreamArrowWriter,
                                     WriterCommitMessage)
 from pyspark.sql.types import StructType
 
-from olake_spark.icelite.stats import footer_stats
+from olake_spark.icelite.stats import footer_stats, unstated_columns
 from olake_spark.icelite.table import DATA, EQ_DELETES, FileEntry, Table
+
+
+def _stated_paths(schema, unstated: set[str]) -> list[str] | bool:
+    """`write_statistics=` for a data file: every parquet leaf column except
+    the `unstated` top-level ones (a flat column's leaf path is its name;
+    pyarrow matches leaf paths, so nested columns are listed leaf by leaf)."""
+    if not unstated:
+        return True
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = pa.BufferOutputStream()
+    pq.write_metadata(schema, buf)
+    leaves = pq.read_metadata(pa.BufferReader(buf.getvalue())).schema
+    paths = (leaves.column(i).path for i in range(len(leaves)))
+    return [p for p in paths if p not in unstated]
 
 
 @dataclass
@@ -87,6 +105,7 @@ class IceliteStreamWriter(DataSourceStreamArrowWriter):
         self.txn_app = options.get("txn_app", "icelite-sink")
         self.upsert = options.get("mode", "append").lower() == "upsert"
         self.columns = [f.name for f in schema.fields]
+        self.unstated = set(unstated_columns(schema))
         t = self._table()
         table_fields = {f.name: f.dataType for f in t.schema.fields}
         missing = set(table_fields) - set(self.columns)
@@ -138,7 +157,10 @@ class IceliteStreamWriter(DataSourceStreamArrowWriter):
             if batch.num_rows == 0:
                 continue
             if writer is None:
-                writer = pq.ParquetWriter(path, batch.schema)
+                writer = pq.ParquetWriter(
+                    path, batch.schema,
+                    write_statistics=_stated_paths(batch.schema, self.unstated),
+                )
             writer.write_batch(batch)
             if self.upsert:
                 keys = batch.select(list(self.identifier_fields))

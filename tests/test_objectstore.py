@@ -366,10 +366,10 @@ class TestFaultAfterWrite:
         group's maintenance-log append: the later groups' output is deleted,
         and a rerun of the same job keeps the row set, leaves no orphan and
         redoes none of the committed group's bins (their source files are
-        gone from the table, so no re-plan can hold them). The rerun runs
-        exactly the fresh plan, which at fill_ratio=1.0 may pack the
-        committed group's output with its partition's leftovers, as the
-        re-plan after any interrupted run does."""
+        gone from the table, so no re-plan can hold them). The rerun finds
+        the job's unlogged commit and keeps its output out of the plan, so
+        it executes exactly the other planned bins and leaves that output
+        in place, although at fill_ratio=1.0 it is itself a small file."""
         monkeypatch.setattr(compact, "COMMIT_GROUP", 1)
         t = _mk_table(spark, os.path.join(tmp_table_dir, "klog"), io_cls())
         n_bins = len(compact.plan_compaction(t, TARGET, fill_ratio=1.0))
@@ -390,8 +390,10 @@ class TestFaultAfterWrite:
         snap = t.snapshot()
         assert snap["operation"] == "compact"
         committed_chunks = set(snap["summary"]["chunk_ids"])
-        consumed = live_before - {e.file_path for e in data_files(t)}
-        assert len(committed_chunks) == 1 and consumed
+        live_after = {e.file_path for e in data_files(t)}
+        consumed = live_before - live_after
+        written = live_after - live_before
+        assert len(committed_chunks) == 1 and consumed and written
         assert log.done_chunk_ids("klog-c") == set()
         assert all(os.path.exists(t._abs(e.file_path)) for e in t.entries())
         assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
@@ -400,10 +402,11 @@ class TestFaultAfterWrite:
 
         res = run_compaction(t, "klog-c", log=log, fill_ratio=1.0,
                              target_bytes=TARGET)
-        assert res["bins_executed"] == len(replan)
+        assert res["bins_executed"] == n_bins - 1
         redone = log.done_chunk_ids("klog-c")
         assert redone and not redone & committed_chunks
-        assert not consumed & {e.file_path for e in data_files(t)}
+        live = {e.file_path for e in data_files(t)}
+        assert written <= live and not consumed & live
         assert row_sets_equal(before, t.scan().select(*COLS))
         assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
 

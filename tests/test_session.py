@@ -1,5 +1,6 @@
 """get_spark's worker setup. Under a `local[...]` master the Python workers
-start from `olake_spark.pydaemon` (no per-task zip re-read) and can import
+start from `olake_spark.pydaemon` (no per-task zip re-read, and a reused
+worker freezes its imports out of the per-task collection) and can import
 the package wherever the driver found it; on any other master neither
 setting is made."""
 
@@ -68,6 +69,32 @@ def test_worker_runs_the_shim(spark):
 
     got = spark.range(1, numPartitions=1).mapInPandas(probe, "m string").collect()
     assert [r.m for r in got] == ["olake_spark.pydaemon"]
+
+
+def test_reused_worker_freezes_gc_before_second_task(spark):
+    def probe(batches):
+        import gc
+        import os
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {"pid": [os.getpid()], "frozen": [gc.get_freeze_count()]}
+        )
+
+    df = spark.range(1, numPartitions=1)
+    by_pid: dict[int, list[int]] = {}
+    # idle workers are handed out oldest first: more jobs than workers
+    # make every worker a reused one
+    for _ in range(12):
+        (r,) = df.mapInPandas(probe, "pid long, frozen long").collect()
+        by_pid.setdefault(r.pid, []).append(r.frozen)
+    # a worker's first report here may be its first task; every later one
+    # comes from a reused worker, which has frozen its imports by then
+    later = [f for reports in by_pid.values() for f in reports[1:]]
+    assert later and all(f > 0 for f in later), by_pid
 
 
 def test_add_py_file_zip_imports_in_task(spark, tmp_path):
