@@ -68,7 +68,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .avro import write_ocf
-from .table import DATA, EQ_DELETES, POS_DELETES, FileEntry, Table, uri_path
+from .table import (DATA, EQ_DELETES, POS_DELETES, FileEntry, Table,
+                    metadata_version, uri_path)
 
 _FMT = "PARQUET"
 
@@ -664,12 +665,9 @@ def _resolve_metadata_path(location: str) -> str:
         cand = os.path.join(mdir, f"v{v}.metadata.json")
         if os.path.isfile(cand):
             return cand
-    versions = []
-    for n in os.listdir(mdir):
-        if n.startswith("v") and n.endswith(".metadata.json"):
-            digits = n[1:-len(".metadata.json")]
-            if digits.isdigit():
-                versions.append((int(digits), n))
+    versions = [
+        (v, n) for n in os.listdir(mdir) if (v := metadata_version(n)) is not None
+    ]
     if not versions:
         raise FileNotFoundError(f"no vN.metadata.json under {mdir!r}")
     return os.path.join(mdir, max(versions)[1])

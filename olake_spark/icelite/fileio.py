@@ -76,6 +76,13 @@ class FileIO:
         returns each key with its last-modified time in the same request."""
         raise NotImplementedError
 
+    def list_files(self, path: str) -> list[tuple[str, float]]:
+        """`(absolute path, mtime)` of every file directly under `path`,
+        not recursive: a delimited prefix listing, which skips the keys
+        below the next `/` and returns each key's last-modified time in
+        the same request."""
+        raise NotImplementedError
+
     def makedirs(self, path: str) -> None:
         raise NotImplementedError
 
@@ -102,6 +109,18 @@ def _walk_with_mtimes(root: str) -> Iterator[tuple[str, float]]:
                 yield p, os.path.getmtime(p)
             except FileNotFoundError:
                 pass  # removed between the listing and the stat
+
+
+def _files_with_mtimes(path: str) -> list[tuple[str, float]]:
+    out = []
+    with os.scandir(path) as it:
+        for e in it:
+            try:
+                if e.is_file():
+                    out.append((e.path, e.stat().st_mtime))
+            except FileNotFoundError:
+                pass  # removed between the listing and the stat
+    return out
 
 
 class LocalFileIO(FileIO):
@@ -137,6 +156,9 @@ class LocalFileIO(FileIO):
 
     def walk_files(self, root: str) -> Iterator[tuple[str, float]]:
         return _walk_with_mtimes(root)
+
+    def list_files(self, path: str) -> list[tuple[str, float]]:
+        return _files_with_mtimes(path)
 
     def makedirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
@@ -238,6 +260,10 @@ class FakeObjectStoreFileIO(FileIO):
     def walk_files(self, root: str) -> Iterator[tuple[str, float]]:
         self._tick("walk_files")
         yield from _walk_with_mtimes(root)
+
+    def list_files(self, path: str) -> list[tuple[str, float]]:
+        self._tick("list_files")
+        return _files_with_mtimes(path)
 
     def makedirs(self, path: str) -> None:
         # object stores have no directories; kept real so the local data

@@ -55,7 +55,7 @@ from .catalog import (NoSuchTableError, TableAlreadyExistsError,
                       check_not_reserved, split_identifier)
 from .clone import snapshot_table as _snapshot_table
 from .fileio import FileIO, LocalFileIO, default_io
-from .table import Table
+from .table import Table, metadata_version
 
 # ------------------------------------------------------------------ server
 
@@ -130,10 +130,7 @@ class _CatalogState:
             names = self.io.list_dir(meta_dir)
         except FileNotFoundError:
             return 0  # versions start at v00001
-        vs = [
-            int(n[1:-len(".metadata.json")]) for n in names
-            if n.startswith("v") and n.endswith(".metadata.json")
-        ]
+        vs = [v for n in names if (v := metadata_version(n)) is not None]
         return max(vs) if vs else 0
 
     def commit(self, ident: str, version: int, meta: dict) -> bool:
@@ -342,17 +339,16 @@ class RestCommitIO(FileIO):
         self._meta_dir = os.path.join(os.path.abspath(root), "metadata")
 
     def atomic_create_json(self, target: str, meta: dict) -> bool:
-        name = os.path.basename(target)
+        version = metadata_version(os.path.basename(target))
         if (
             os.path.dirname(os.path.abspath(target)) == self._meta_dir
-            and name.startswith("v")
-            and name.endswith(".metadata.json")
+            and version is not None
         ):
             ns, tbl = self._ident.split(".", 1)
             code, _ = self._http.call(
                 "POST",
                 f"/v1/namespaces/{ns}/tables/{tbl}/commit",
-                {"version": int(name[1:-len(".metadata.json")]), "metadata": meta},
+                {"version": version, "metadata": meta},
             )
             if code == 404:
                 raise NoSuchTableError(self._ident)
@@ -371,6 +367,9 @@ class RestCommitIO(FileIO):
 
     def walk_files(self, root):
         return self._base.walk_files(root)
+
+    def list_files(self, path):
+        return self._base.list_files(path)
 
     def makedirs(self, path):
         return self._base.makedirs(path)

@@ -20,7 +20,11 @@ through the FileIO interface (icelite.fileio) — deployment to an object
 store / catalog service implements ONE class, mirroring the reference's
 catalog-vs-FileIO split, iceberg_utils.go:197-260):
 
-    <root>/metadata/v00001.metadata.json     ← linearization point
+    <root>/metadata/v00001.metadata.json     ← linearization point; the
+                                               newest version is current,
+                                               older ones but v00001 go at
+                                               expiry
+                                               (remove_superseded_metadata)
     <root>/metadata/version-hint.text        ← advisory cache
     <root>/metadata/manifests/mf-*.parquet   ← one row per data/delete file
     <root>/data/<seq>-<uuid>/<_p_col=val>/*.parquet  ← data files, one
@@ -79,6 +83,17 @@ _MANIFEST_SCHEMA = pa.schema(
         ("nulls_json", pa.string()),
     ]
 )
+
+
+def metadata_version(name: str) -> int | None:
+    """N of a `vN.metadata.json` file name, or None for any other name:
+    a name whose N is not all ASCII digits, such as Iceberg's gzip
+    `v1.gz.metadata.json`, is not a version."""
+    if name.startswith("v") and name.endswith(".metadata.json"):
+        digits = name[1:-len(".metadata.json")]
+        if digits.isascii() and digits.isdigit():
+            return int(digits)
+    return None
 
 
 class TxnAlreadyApplied(Exception):
@@ -244,17 +259,24 @@ class Table:
 
     def refresh(self) -> "Table":
         meta_dir = os.path.join(self.root, "metadata")
-        versions = [
-            int(n[1:-len(".metadata.json")])
-            for n in self.io.list_dir(meta_dir)
-            if n.startswith("v") and n.endswith(".metadata.json")
-        ]
-        if not versions:
-            raise FileNotFoundError(f"no icelite table at {self.root}")
-        v = max(versions)
-        meta = json.loads(
-            self.io.read_text(os.path.join(meta_dir, f"v{v:05d}.metadata.json"))
-        )
+        for attempt in range(2):
+            versions = [
+                (v, n)
+                for n in self.io.list_dir(meta_dir)
+                if (v := metadata_version(n)) is not None
+            ]
+            if not versions:
+                raise FileNotFoundError(f"no icelite table at {self.root}")
+            v, name = max(versions)
+            try:
+                text = self.io.read_text(os.path.join(meta_dir, name))
+                break
+            except FileNotFoundError:
+                # expiry removes a version once a newer one exists, so the
+                # version just listed can vanish before this read
+                if attempt:
+                    raise
+        meta = json.loads(text)
         with self._lock:
             self._version, self._meta = v, meta
         return self
@@ -2361,7 +2383,8 @@ class Table:
     ) -> dict:
         """Drop old snapshots from metadata (current and TAGGED snapshots
         always kept). Data/delete/manifest files become orphans, reaped by
-        `remove_orphan_files`.
+        `remove_orphan_files`; `remove_superseded_metadata` removes the
+        older metadata versions.
 
         Arguments left as None fall back to the table's retention
         properties — Iceberg's `history.expire.min-snapshots-to-keep` and
@@ -2504,6 +2527,40 @@ class Table:
             self.io.remove_many(victims)
             _remove_emptied_dirs(victims, roots)
         return sorted(orphans)
+
+    def remove_superseded_metadata(
+        self, grace_seconds: float = 3 * 24 * 3600, dry_run: bool = False
+    ) -> list[str]:
+        """Delete every `vN.metadata.json` but v00001 whose next existing
+        version was written before the grace cutoff; returns their
+        root-relative paths.
+
+        Each version re-serializes every retained snapshot, so kept
+        versions grow the metadata bytes quadratically with commits, and
+        every refresh lists them. The newest version and version-hint.text
+        always stay, and so does v00001: `Table.create` detects an existing
+        table by failing to create it. A version goes only once its
+        successor is older than the grace period. A writer that refreshed
+        before the reap can still create a reaped version's number, and
+        that commit is then silently lost behind the newer versions, so the
+        grace period must outlast any writer's commit; at grace 0 no writer
+        may run beside the reap. One listing of metadata/'s direct
+        children (it carries the mtimes), one batched delete."""
+        meta_dir = os.path.join(self.root, "metadata")
+        versions = sorted(
+            (v, p, mtime)
+            for p, mtime in self.io.list_files(meta_dir)
+            if (v := metadata_version(os.path.basename(p))) is not None
+        )
+        cutoff = time.time() - grace_seconds
+        victims = [
+            p
+            for (v, p, _), (_, _, successor_mtime) in zip(versions, versions[1:])
+            if v > 1 and successor_mtime <= cutoff
+        ]
+        if victims and not dry_run:
+            self.io.remove_many(victims)
+        return [os.path.relpath(p, self.root) for p in victims]
 
 
 # ------------------------------------------------------------------ helpers

@@ -17,6 +17,15 @@ re-implemented over icelite metadata (SURVEY.md §7 step 6):
   entry carries, so the reap issues no per-file request; a write-job
   directory the reap empties goes too (data/, deletes/ and
   metadata/manifests/ themselves always stay).
+- `remove_superseded_metadata`: right after the orphan reap, delete every
+  `vN.metadata.json` whose next version was written before the same grace
+  cutoff (one listing of metadata/'s direct children, one batched delete).
+  The current version, v00001 (`Table.create`'s existence check) and
+  version-hint.text always stay, so the table's metadata/ holds two
+  versions after an expiry at grace 0 instead of one per commit ever made.
+
+`run_expire` returns `snapshots_expired`, `orphans_removed` (0 on a dry
+run), `orphans_found` and `metadata_versions_removed` (0 on a dry run).
 
 At deployment scale the physical listing is a distributed object-store list
 job; the reconciliation is the same set difference.
@@ -38,14 +47,28 @@ def run_expire(
     job_id: str | None = None,
     log: MaintenanceLog | None = None,
 ) -> dict:
+    """Expire snapshots, then reap orphan files and superseded metadata
+    versions older than `grace_seconds`.
+
+    The default grace of 0 requires that no other writer commits to the
+    table while this runs: a writer that refreshed before the reap can
+    re-create a reaped version number, and its commit is then silently
+    lost behind the newer versions (a catalog whose commit checks
+    `version == current + 1` refuses it instead), and a writer's staged,
+    not yet committed files are orphans to the reap."""
     expired = table.expire_snapshots(keep_last=keep_last, older_than_ms=older_than_ms)
     orphans: list[str] = []
+    versions: list[str] = []
     if reap_orphans:
         orphans = table.remove_orphan_files(grace_seconds=grace_seconds, dry_run=dry_run)
+        versions = table.remove_superseded_metadata(
+            grace_seconds=grace_seconds, dry_run=dry_run
+        )
     out = {
         "snapshots_expired": expired["expired"],
         "orphans_removed": 0 if dry_run else len(orphans),
         "orphans_found": len(orphans),
+        "metadata_versions_removed": 0 if dry_run else len(versions),
     }
     if log is not None and job_id is not None:
         log.log_done(

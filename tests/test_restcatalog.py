@@ -249,6 +249,36 @@ class TestCommitRacesOverHttp:
         assert commit(2) == 409       # replay of a won version loses
 
 
+def test_commit_through_catalog_after_metadata_reap(spark, cat):
+    """Expiry reaps the superseded metadata versions; the service's CAS
+    (version == current + 1, current read from the listing) still takes
+    the next commit, also from a handle loaded before the reap."""
+    from olake_spark.operators.expire import run_expire
+
+    ns = _fresh("reap")
+    t = cat.create_table(f"{ns}.t", datagen.IMAGES_SCHEMA,
+                         identifier_fields=("image_id",))
+    stale = cat.load_table(f"{ns}.t")
+    df = datagen.gen_images_df(spark, 30)
+    n = "cast(substring(image_id, 5, 12) as bigint)"
+    t.append(df.filter(f"{n} < 10"))
+    t.append(df.filter(f"{n} >= 10 and {n} < 20"))
+    res = run_expire(t, keep_last=1, grace_seconds=0.0)
+    assert res["metadata_versions_removed"] == 2
+
+    def versions():
+        return sorted(
+            n for n in os.listdir(os.path.join(t.root, "metadata"))
+            if n.endswith(".metadata.json")
+        )
+
+    assert versions() == ["v00001.metadata.json", "v00004.metadata.json"]
+    stale.append(df.filter(f"{n} >= 20"))
+    assert versions() == ["v00001.metadata.json", "v00004.metadata.json",
+                          "v00005.metadata.json"]
+    assert cat.load_table(f"{ns}.t").scan().count() == 30
+
+
 def test_register_existing_root(spark, cat, tmp_path):
     # Iceberg register_table: catalog an out-of-warehouse root by
     # reference; commits keep CASing against the PRE-EXISTING version
