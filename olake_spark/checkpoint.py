@@ -25,7 +25,7 @@ from pyspark.sql.types import (LongType, StringType, StructField, StructType,
                                TimestampType)
 
 from olake_spark.icelite.stats import footer_stats
-from olake_spark.icelite.table import DATA, FileEntry, Table
+from olake_spark.icelite.table import DATA, FileEntry, Table, _may_match
 
 LOG_SCHEMA = StructType(
     [
@@ -125,13 +125,31 @@ class MaintenanceLog:
         return self._chunk_ids(job_id, "planned")
 
     def _chunk_ids(self, job_id: str, status: str) -> set[str]:
-        df = self.table.scan(columns=["job_id", "chunk_id", "status"])
-        rows = (
-            df.filter((df.job_id == job_id) & (df.status == status))
-            .select("chunk_id")
-            .collect()
-        )
-        return {r["chunk_id"] for r in rows}
+        """Chunk ids logged with `status` for `job_id`, read on the driver
+        with pyarrow from the log's live data files (no Spark job). Only
+        `_append_rows` writes the log, and it adds data files alone: a
+        delete file here means another writer touched it, and a read that
+        skips it would return deleted rows."""
+        t = self.table
+        entries = t.entries()
+        if any(e.content != DATA for e in entries):
+            raise ValueError(
+                f"maintenance log {t.root}: snapshot {t.current_snapshot_id} "
+                "holds delete files; the log is append-only"
+            )
+        want = [("job_id", "==", job_id), ("status", "==", status)]
+        out: set[str] = set()
+        for e in entries:
+            if not _may_match(e, want):
+                continue
+            rows = pq.read_table(
+                t._abs(e.file_path), columns=["job_id", "chunk_id", "status"]
+            ).to_pydict()
+            out.update(
+                c for j, c, s in zip(rows["job_id"], rows["chunk_id"], rows["status"])
+                if j == job_id and s == status
+            )
+        return out
 
     def metrics_df(self):
         return self.table.scan()

@@ -39,10 +39,14 @@ Conformance matrix (spec area → status):
                                              history is icelite-native)
 
 Not emitted: prior snapshots (CURRENT-state export only), Puffin stats,
-metrics beyond counts/bounds/nulls. `null_value_counts` has no entry for a
-binary column: data files carry no parquet statistics on one
-(`stats.unstated_columns`), so the manifest has no null count to export;
-Iceberg treats a missing entry as unknown. No external Iceberg reader ships in
+metrics beyond counts/bounds/nulls. The per-file integer interval
+summaries (`FileEntry.ranges`) have no spec field: an export carries only
+each column's lower/upper bound, and an imported table has no summaries
+(it prunes by min/max alone until its files are rewritten).
+`null_value_counts` has no entry for a binary column: data files carry no
+parquet statistics on one (`stats.unstated_columns`), so the manifest has
+no null count to export; Iceberg treats a missing entry as unknown.
+No external Iceberg reader ships in
 this container, so the interop proof is the in-repo ROUND TRIP:
 `import_iceberg` below reads an export (metadata.json + Avro manifests)
 back into a brand-new icelite table — schema, identifier fields, partition

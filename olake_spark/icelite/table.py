@@ -26,7 +26,11 @@ catalog-vs-FileIO split, iceberg_utils.go:197-260):
                                                expiry
                                                (remove_superseded_metadata)
     <root>/metadata/version-hint.text        ← advisory cache
-    <root>/metadata/manifests/mf-*.parquet   ← one row per data/delete file
+    <root>/metadata/manifests/mf-*.parquet   ← one row per data/delete file:
+                                               counts, min/max/null JSON, and
+                                               for data files a `ranges` map
+                                               of packed int64 intervals per
+                                               integral column (stats.py)
     <root>/data/<seq>-<uuid>/<_p_col=val>/*.parquet  ← data files, one
                                                directory per write job
     <root>/deletes/<seq>-<uuid>/*.parquet    ← equality/positional deletes
@@ -35,6 +39,7 @@ catalog-vs-FileIO split, iceberg_utils.go:197-260):
 from __future__ import annotations
 
 import json
+import numbers
 import os
 import threading
 import time
@@ -47,12 +52,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BooleanType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (BinaryType, BooleanType, IntegerType,
+                               LongType, MapType, StringType, StructField,
+                               StructType)
 
 from olake_spark.icelite.fileio import FileIO, default_io
 from olake_spark.icelite.spec import PartitionSpec
-from olake_spark.icelite.stats import collect_file_stats, unstated_columns
+from olake_spark.icelite.stats import (collect_file_stats, unpack_ranges,
+                                      unstated_columns)
 
 DATA = 0
 POS_DELETES = 1  # Iceberg v2 positional deletes: rows of (file_path, pos)
@@ -81,6 +88,9 @@ _MANIFEST_SCHEMA = pa.schema(
         ("mins_json", pa.string()),
         ("maxs_json", pa.string()),
         ("nulls_json", pa.string()),
+        # per integral column: packed int64 interval endpoints (stats.py);
+        # absent from manifests written before it, read as no summaries
+        ("ranges", pa.map_(pa.string(), pa.binary())),
     ]
 )
 
@@ -116,6 +126,9 @@ class FileEntry:
     mins: dict[str, Any]
     maxs: dict[str, Any]
     nulls: dict[str, int]
+    # column -> packed interval endpoints (stats.pack_ranges), decoded only
+    # when a scan predicate names the column (_may_match)
+    ranges: dict[str, bytes] = dataclasses.field(default_factory=dict)
 
     def to_row(self) -> dict:
         return {
@@ -128,10 +141,11 @@ class FileEntry:
             "mins_json": json.dumps(self.mins, sort_keys=True, default=str),
             "maxs_json": json.dumps(self.maxs, sort_keys=True, default=str),
             "nulls_json": json.dumps(self.nulls, sort_keys=True),
+            "ranges": sorted(self.ranges.items()),
         }
 
     @staticmethod
-    def from_row(r: dict) -> "FileEntry":
+    def from_row(r: dict, ranges: dict[str, bytes]) -> "FileEntry":
         return FileEntry(
             content=r["content"],
             file_path=r["file_path"],
@@ -142,6 +156,7 @@ class FileEntry:
             mins=json.loads(r["mins_json"]),
             maxs=json.loads(r["maxs_json"]),
             nulls=json.loads(r["nulls_json"]),
+            ranges=ranges,
         )
 
 
@@ -164,12 +179,36 @@ _MANIFEST_CACHE: dict[str, list] = {}
 _MANIFEST_CACHE_MAX = 8192
 
 
+def _ranges_column(t: pa.Table) -> list[dict[str, bytes]]:
+    """Per row, the `ranges` map as a dict: from the flat key and value
+    arrays (a map column's to_pylist costs about twice the rest of the
+    manifest's), one str object per column name; no column (a manifest
+    written before it) → empty dicts."""
+    if "ranges" not in t.column_names:
+        return [{} for _ in range(t.num_rows)]
+    col = t.column("ranges").combine_chunks()
+    off = col.offsets.to_pylist()
+    names: dict[str, str] = {}
+    keys = [names.setdefault(k, k) for k in col.keys.to_pylist()]
+    vals = col.items.to_pylist()
+    return [
+        dict(zip(keys[a:b], vals[a:b])) for a, b in zip(off, off[1:])
+    ]
+
+
 def _read_manifest(path: str) -> list[FileEntry]:
     cached = _MANIFEST_CACHE.get(path)
     if cached is not None:
         return list(cached)
     t = pq.read_table(path)
-    entries = [FileEntry.from_row(r) for r in t.to_pylist()]
+    ranges = _ranges_column(t)
+    entries = [
+        FileEntry.from_row(r, rg)
+        for r, rg in zip(
+            t.select([c for c in t.column_names if c != "ranges"]).to_pylist(),
+            ranges,
+        )
+    ]
     if len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
         _MANIFEST_CACHE.clear()
     _MANIFEST_CACHE[path] = entries
@@ -426,13 +465,17 @@ class Table:
         StructField("mins_json", StringType(), True),
         StructField("maxs_json", StringType(), True),
         StructField("nulls_json", StringType(), True),
+        # null for entries of manifests written before the column existed
+        StructField("ranges", MapType(StringType(), BinaryType()), True),
     ])
 
     def inspect_files(self, snapshot_id: int | None = None) -> DataFrame:
         """The `files` metadata table: one row per live data / delete file of
         the snapshot, straight off its manifests (content 0=data, 1=position
-        deletes, 2=equality deletes), with per-file stats as JSON columns.
-        Distributed: Spark scans the manifest parquet files directly."""
+        deletes, 2=equality deletes), with per-file stats as JSON columns
+        and the integral columns' packed interval summaries in `ranges`
+        (null for entries of manifests written before it). Distributed:
+        Spark scans the manifest parquet files directly."""
         snap = self.snapshot(snapshot_id)
         if snap is None or not snap["manifests"]:
             return self.spark.createDataFrame([], self._FILES_SCHEMA)
@@ -1109,7 +1152,9 @@ class Table:
             group = int(comps.pop(0).split("=", 1)[1]) if group_col else None
             written.append((group, path, _parse_partition(os.sep.join(comps))))
 
-        stats = collect_file_stats(self.spark, [p for _, p, _ in written])
+        stats = collect_file_stats(
+            self.spark, [p for _, p, _ in written], ranges=content == DATA
+        )
         groups: dict[int | None, list[FileEntry]] = {}
         for group, path, partition in written:
             st = stats[path]
@@ -1120,7 +1165,7 @@ class Table:
                 FileEntry(
                     content, os.path.relpath(path, self.root), partition, seq,
                     st["record_count"], st["file_size_bytes"],
-                    st["mins"], st["maxs"], st["null_counts"],
+                    st["mins"], st["maxs"], st["null_counts"], st["ranges"],
                 )
             )
         if junk:
@@ -2646,6 +2691,17 @@ def _parse_partition(rel_dir: str) -> dict[str, str]:
     return out
 
 
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+# the closed integer interval each comparison with an integer admits
+_INT_BOUNDS = {
+    "==": lambda v: (v, v),
+    "<": lambda v: (_INT64_MIN, v - 1),
+    "<=": lambda v: (_INT64_MIN, v),
+    ">": lambda v: (v + 1, _INT64_MAX),
+    ">=": lambda v: (v, _INT64_MAX),
+}
+
 _OPS = {
     "==": lambda lo, hi, v: not (v < lo or hi < v),
     "<": lambda lo, hi, v: lo < v,
@@ -2656,8 +2712,14 @@ _OPS = {
 
 
 def _may_match(e: FileEntry, predicates: list[tuple[str, str, Any]]) -> bool:
-    """Min/max file pruning: keep the file unless a predicate PROVES no row can
-    match. Missing stats → keep (safe)."""
+    """File pruning: keep the file unless the predicates PROVE no row can
+    match. Missing stats → keep (safe).
+
+    Each predicate is tested against the file's min/max alone. Then, per
+    column with interval summaries (`e.ranges`), the integer predicates on
+    that column are intersected into ONE closed interval first, and the file
+    is dropped only if no summary interval meets it: tested one predicate at
+    a time, `>= lo` and `< hi` could each hit a different interval."""
     for col, op, val in predicates:
         lo, hi = e.mins.get(col), e.maxs.get(col)
         if lo is None or hi is None or op not in _OPS:
@@ -2667,6 +2729,21 @@ def _may_match(e: FileEntry, predicates: list[tuple[str, str, Any]]) -> bool:
                 return False
         except TypeError:
             continue
+    if not e.ranges:
+        return True
+    bounds: dict[str, tuple[int, int]] = {}
+    for col, op, val in predicates:
+        if (col not in e.ranges or op not in _INT_BOUNDS
+                or isinstance(val, bool) or not isinstance(val, numbers.Integral)):
+            continue
+        lo, hi = _INT_BOUNDS[op](int(val))
+        a, b = bounds.get(col, (_INT64_MIN, _INT64_MAX))
+        bounds[col] = (max(a, lo), min(b, hi))
+    for col, (lo, hi) in bounds.items():
+        if lo > hi or not any(
+            a <= hi and lo <= b for a, b in unpack_ranges(e.ranges[col])
+        ):
+            return False
     return True
 
 

@@ -27,6 +27,12 @@ re-implemented over icelite metadata (SURVEY.md §7 step 6):
 `run_expire` returns `snapshots_expired`, `orphans_removed` (0 on a dry
 run), `orphans_found` and `metadata_versions_removed` (0 on a dry run).
 
+Given a maintenance `log`, it expires the log table too: every snapshot but
+the newest (the log only appends, so the newest lists every manifest ever
+added and no row is lost), then the log's superseded metadata versions
+under the same grace. Without this, each logged chunk left one metadata
+version re-serializing every earlier snapshot.
+
 At deployment scale the physical listing is a distributed object-store list
 job; the reconciliation is the same set difference.
 """
@@ -51,11 +57,11 @@ def run_expire(
     versions older than `grace_seconds`.
 
     The default grace of 0 requires that no other writer commits to the
-    table while this runs: a writer that refreshed before the reap can
-    re-create a reaped version number, and its commit is then silently
-    lost behind the newer versions (a catalog whose commit checks
-    `version == current + 1` refuses it instead), and a writer's staged,
-    not yet committed files are orphans to the reap."""
+    table, nor to `log` when one is given, while this runs: a writer that
+    refreshed before the reap can re-create a reaped version number, and
+    its commit is then silently lost behind the newer versions (a catalog
+    whose commit checks `version == current + 1` refuses it instead), and a
+    writer's staged, not yet committed files are orphans to the reap."""
     expired = table.expire_snapshots(keep_last=keep_last, older_than_ms=older_than_ms)
     orphans: list[str] = []
     versions: list[str] = []
@@ -81,4 +87,10 @@ def run_expire(
                 "snapshot_after": table.current_snapshot_id,
             },
         )
+    if log is not None:
+        log.table.expire_snapshots(keep_last=1)
+        if reap_orphans:
+            log.table.remove_superseded_metadata(
+                grace_seconds=grace_seconds, dry_run=dry_run
+            )
     return out

@@ -14,9 +14,11 @@ among them. This operator:
    one contiguous run inside and across manifests, and phash-range runs
    stay clustered. A per-partition split would only multiply files: with
    no partition summary in the manifest list, no reader could skip one;
-2. optionally **audits** stats by re-reading parquet footers (driver-side
-   pyarrow, no data read) and comparing against manifest values — the
-   verification demanded by SURVEY.md §7 step 7;
+2. optionally **audits** stats by re-harvesting them (parquet footers, and
+   the integral columns behind the `ranges` summaries) and comparing
+   against manifest values — the verification demanded by SURVEY.md §7
+   step 7. A manifest key the entry lacks (a summary from before the
+   `ranges` column, a writer that harvests none) is not checked;
 3. commits a metadata-only snapshot: identical file set, new manifest list
    (readers pinned to the old snapshot are untouched).
 """
@@ -25,7 +27,7 @@ from __future__ import annotations
 
 import json
 
-from olake_spark.icelite.stats import collect_file_stats
+from olake_spark.icelite.stats import collect_file_stats, unpack_ranges
 from olake_spark.icelite.table import DATA, FileEntry, Table, _read_manifest
 
 
@@ -63,7 +65,8 @@ def rewrite_manifests(
         # collect_file_stats) instead of a serial per-file driver loop
         data_entries = [e for e in entries if e.content == DATA]
         stats = collect_file_stats(
-            table.spark, [table._abs(e.file_path) for e in data_entries]
+            table.spark, [table._abs(e.file_path) for e in data_entries],
+            ranges=True,
         )
         for e in data_entries:
             st = stats[table._abs(e.file_path)]
@@ -78,6 +81,13 @@ def rewrite_manifests(
                 ):
                     raise AssertionError(
                         f"min({col}) drift for {e.file_path}: {e.mins[col]} != {lo}"
+                    )
+            for col, packed in e.ranges.items():
+                if st["ranges"].get(col) != packed:
+                    raise AssertionError(
+                        f"ranges({col}) drift for {e.file_path}: "
+                        f"{unpack_ranges(packed)} != "
+                        f"{unpack_ranges(st['ranges'].get(col, b''))}"
                     )
             audited += 1
 

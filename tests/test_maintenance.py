@@ -478,9 +478,9 @@ class TestDistributedAudit:
         calls = []
         real = stats_mod.collect_file_stats
 
-        def counting(spark_, paths):
+        def counting(spark_, paths, **kw):
             calls.append(len(paths))
-            return real(spark_, paths)
+            return real(spark_, paths, **kw)
 
         monkeypatch.setattr(stats_mod, "_DISTRIBUTE_THRESHOLD", 1)
         monkeypatch.setattr(mf_mod, "collect_file_stats", counting)

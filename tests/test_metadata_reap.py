@@ -12,7 +12,7 @@ import time
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField
+from pyspark.sql.types import StringType, StructField, StructType
 
 from olake_spark import datagen
 from olake_spark.checkpoint import MaintenanceLog
@@ -219,3 +219,24 @@ def test_gzip_metadata_stray_does_not_break_load(spark, tmp_table_dir):
         "metadata/v00002.metadata.json"
     ]
     assert os.path.exists(stray)
+
+
+def test_expire_with_log_bounds_the_log_metadata(spark, tmp_table_dir):
+    """`run_expire(log=…)` expires the log table's snapshots and reaps its
+    superseded metadata versions too: after 100 logged chunks the log keeps
+    at most two versions, and every chunk id is still found."""
+    t = Table.create(
+        spark, os.path.join(tmp_table_dir, "t"),
+        StructType([StructField("k", StringType(), True)]),
+    )
+    log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "log"))
+    for i in range(100):
+        log.log_done("job", "compact", {"chunk_id": f"c{i}"})
+    assert len(version_files(log.table)) == 101
+    run_expire(t, grace_seconds=0.0, job_id="exp", log=log)
+    assert len(version_files(log.table)) <= 2
+    assert len(log.table.snapshots()) == 1
+    want = {f"c{i}" for i in range(100)}
+    assert log.done_chunk_ids("job") == want
+    assert MaintenanceLog(spark, log.root).done_chunk_ids("job") == want
+    assert log.done_chunk_ids("exp") == {"expire-None"}  # t has no snapshot
