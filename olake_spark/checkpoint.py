@@ -1,11 +1,13 @@
-"""Maintenance log: per-partition lineage + metrics + idempotent resume (F4).
+"""Maintenance log: per-partition lineage + metrics (F4).
 
-The Spark rendition of the reference's chunk-set resume state
-(types/state.go:187-230 — a chunk is removed from the state file only after
-its writer thread closes cleanly; restart skips completed chunks,
-drivers/abstract/backfill.go:44-58). Here: every maintenance job plans chunks,
-logs `planned`, executes, logs `done` (with rows/bytes/snapshot lineage);
-a restart with the same job_id skips chunks already logged `done`.
+Every maintenance job plans chunks, logs `planned`, executes, and logs
+`done` (with rows/bytes/snapshot lineage); `metrics_df` and `inspect` read
+it. No engine path reads it back: the reference's resume contract
+(types/state.go:187-230 — a chunk counts as done only once its write has
+landed, and a restart skips done chunks, drivers/abstract/backfill.go:44-58)
+rides in the table's own commits, so a kill between a commit and its log
+append cannot break resume (backfill: an idempotent-writer txn per chunk
+group; compaction and clustering: their snapshot summaries).
 
 The log itself is an icelite table (dogfooding: same atomic-commit format),
 with a driver-side pyarrow append fast path so control-plane writes don't pay
@@ -119,14 +121,8 @@ class MaintenanceLog:
         )
 
     def done_chunk_ids(self, job_id: str) -> set[str]:
-        return self._chunk_ids(job_id, "done")
-
-    def planned_chunk_ids(self, job_id: str) -> set[str]:
-        return self._chunk_ids(job_id, "planned")
-
-    def _chunk_ids(self, job_id: str, status: str) -> set[str]:
-        """Chunk ids logged with `status` for `job_id`, read on the driver
-        with pyarrow from the log's live data files (no Spark job). Only
+        """Chunk ids logged `done` for `job_id`, read on the driver with
+        pyarrow from the log's live data files (no Spark job). Only
         `_append_rows` writes the log, and it adds data files alone: a
         delete file here means another writer touched it, and a read that
         skips it would return deleted rows."""
@@ -137,7 +133,7 @@ class MaintenanceLog:
                 f"maintenance log {t.root}: snapshot {t.current_snapshot_id} "
                 "holds delete files; the log is append-only"
             )
-        want = [("job_id", "==", job_id), ("status", "==", status)]
+        want = [("job_id", "==", job_id), ("status", "==", "done")]
         out: set[str] = set()
         for e in entries:
             if not _may_match(e, want):
@@ -147,7 +143,7 @@ class MaintenanceLog:
             ).to_pydict()
             out.update(
                 c for j, c, s in zip(rows["job_id"], rows["chunk_id"], rows["status"])
-                if j == job_id and s == status
+                if j == job_id and s == "done"
             )
         return out
 

@@ -224,8 +224,9 @@ class Table:
         self.io = io or default_io()
         self._meta: dict | None = None
         self._version: int = 0
-        # in-process writers (e.g. concurrent compaction bins) serialize
-        # their read-modify-write of (_meta, _version) here; cross-process
+        # writers on several driver threads sharing this Table (a streaming
+        # query runs its foreachBatch on its own thread) serialize their
+        # read-modify-write of (_meta, _version) here; cross-process
         # atomicity still comes from the FileIO's atomic create
         self._lock = threading.RLock()
 
@@ -1611,10 +1612,10 @@ class Table:
         """Metadata-only import of existing parquet files — Iceberg's
         `add_files` procedure (spark AddFilesProcedure): register the files
         in a new append snapshot WITHOUT copying, moving, or rewriting a
-        single data byte. `source` is a directory (listed with the same
-        O(first-level-dirs)-driver / executor-subtree-walk contract orphan
-        reaping uses, so a 10^5-file import never serializes on the driver)
-        or an explicit file list.
+        single data byte. `source` is a directory (listed by `_list_files`,
+        as orphan reaping lists: a driver walk for small trees, a Spark
+        listing job above DISTRIBUTED_LIST_THRESHOLD files, so a 10^5-file
+        import never serializes on the driver) or an explicit file list.
 
         Files outside the table root are manifested by ABSOLUTE path and
         the engine never physically deletes them: rewrites only drop the
@@ -1637,7 +1638,7 @@ class Table:
 
         Per-file min/max/null stats come from parquet footers, the same
         metadata-only harvest `append` uses (distributed above 512 files):
-        the whole import is one listing job + one stats job + one commit.
+        the whole import is one listing + one stats harvest + one commit.
         """
         self.refresh()
         skip = self._txn_applied(txn)
@@ -1648,7 +1649,7 @@ class Table:
             src_root = os.path.abspath(source)
             paths = sorted(
                 p
-                for p, _ in _list_files_spark(self.spark, self.io, [src_root])
+                for p, _ in self._list_files([src_root])
                 if p.endswith(".parquet")
                 and not os.path.basename(p).startswith((".", "_"))
             )
@@ -2503,29 +2504,42 @@ class Table:
                 pass
         return {"expired": expired["n"]}
 
-    # above this many files, the orphan listing switches from a driver-side
-    # walk to a Spark job (one task per first-level directory)
+    # above this many files, a listing switches from a driver-side walk to
+    # a Spark job (one task per first-level directory)
     DISTRIBUTED_LIST_THRESHOLD = 4096
+
+    def _list_files(self, roots: list[str]) -> list[tuple[str, float]]:
+        """`(absolute path, mtime)` of every file under `roots`: a
+        driver-side walk while it stays within DISTRIBUTED_LIST_THRESHOLD
+        files, else a Spark listing job (`_list_files_spark`). Small trees
+        skip the job's scheduling cost; large ones never serialize on the
+        driver."""
+        listing: list[tuple[str, float]] = []
+        for base in roots:
+            for item in self.io.walk_files(base):
+                listing.append(item)
+                if len(listing) > self.DISTRIBUTED_LIST_THRESHOLD:
+                    return _list_files_spark(self.spark, self.io, roots)
+        return listing
 
     def remove_orphan_files(
         self,
         grace_seconds: float = 3 * 24 * 3600,
         dry_run: bool = False,
-        distributed: bool | None = None,
     ) -> list[str]:
         """Delete files under data/ deletes/ metadata/manifests/ that no
         retained snapshot references and that are older than the grace period
         (never touch files newer than grace — they may belong to an in-flight
         commit).
 
-        `distributed=None` auto-selects the listing strategy: a driver-side
-        walk bounded by DISTRIBUTED_LIST_THRESHOLD files, else a Spark listing
-        job — one task per first-level (write-job) directory, each executor
-        listing its own prefix with mtimes, the object-store pattern. Either
-        way the grace check reads the mtimes the listing returned and the
-        deletion is ONE batched remove_many call, so driver FileIO work stays
-        O(1) calls no matter how many orphans exist. Write-job directories
-        the deletion empties are removed with it; the listing roots stay."""
+        The listing is `_list_files`: a driver-side walk, or above
+        DISTRIBUTED_LIST_THRESHOLD files a Spark listing job — one task per
+        first-level (write-job) directory, each executor listing its own
+        prefix with mtimes, the object-store pattern. Either way the grace
+        check reads the mtimes the listing returned and the deletion is ONE
+        batched remove_many call, so driver FileIO work stays O(1) calls no
+        matter how many orphans exist. Write-job directories the deletion
+        empties are removed with it; the listing roots stay."""
         self.refresh()
         referenced: set[str] = set()
         for s in self.meta["snapshots"]:
@@ -2538,25 +2552,7 @@ class Table:
             os.path.join(self.root, sub)
             for sub in ("data", "deletes", os.path.join("metadata", "manifests"))
         ]
-
-        listing: list[tuple[str, float]] = []
-        if distributed is not True:
-            overflow = False
-            for base in roots:
-                for item in self.io.walk_files(base):
-                    listing.append(item)
-                    if (
-                        distributed is None
-                        and len(listing) > self.DISTRIBUTED_LIST_THRESHOLD
-                    ):
-                        overflow = True
-                        break
-                if overflow:
-                    break
-            if overflow:
-                distributed = True
-        if distributed:
-            listing = _list_files_spark(self.spark, self.io, roots)
+        listing = self._list_files(roots)
 
         orphans: list[str] = []
         victims: list[str] = []
@@ -2631,13 +2627,13 @@ def _remove_emptied_dirs(removed: list[str], roots: list[str]) -> None:
 def _list_files_spark(
     spark: SparkSession, io: FileIO, roots: list[str]
 ) -> list[tuple[str, float]]:
-    """Distributed prefix listing for orphan reaping: the driver enumerates
-    only FIRST-level entries (write-job directories, and any file placed
-    directly under a root) through one list_dir per root; each executor task
-    then lists one entry — a subtree walk, or a single file — and returns
-    (path, mtime). In local mode tasks share the filesystem; on a deployment
-    each executor lists its own object-store prefix — driver work is
-    O(first-level entries), never a request per file."""
+    """Distributed prefix listing for `Table._list_files`: the driver
+    enumerates only FIRST-level entries (write-job directories, and any file
+    placed directly under a root) through one list_dir per root; each
+    executor task then lists one entry — a subtree walk, or a single file —
+    and returns (path, mtime). In local mode tasks share the filesystem; on a
+    deployment each executor lists its own object-store prefix — driver work
+    is O(first-level entries), never a request per file."""
     units = [
         os.path.join(r, name)
         for r in roots

@@ -369,9 +369,9 @@ def run_autopilot(
 ) -> dict:
     """Plan, then (unless ``execute=False``) run each action through its
     operator. Returns {health_before, actions (with per-op results),
-    health_after}. Resumable: the same ``job_id`` + ``log`` skips chunks
-    the interrupted run already committed, exactly as the underlying
-    operators do."""
+    health_after}. Resumable: rerun with the same ``job_id`` and each
+    operator resumes from the table's own commits, as it does when called
+    directly (``log`` only records lineage)."""
     pol = resolve_policy(table, policy)
     before = inspect_health(table, pol)
     actions = plan_maintenance(table, pol, health=before)

@@ -121,7 +121,9 @@ def run_cluster_rewrite(
     boundary_sample_rows: int = 1_000_000,
     verify: bool = False,
 ) -> dict:
-    """Rewrite the whole table clustered by the chosen curve key."""
+    """Rewrite the whole table clustered by the chosen curve key. Skipped,
+    log or no log, while every live data file is the output of a retained
+    `cluster` snapshot of the same `job_id` and `curve`."""
     table.refresh()
     if target_bytes is None:
         target_bytes = table.target_file_size
@@ -136,9 +138,16 @@ def run_cluster_rewrite(
     total_bytes = sum(e.file_size_bytes for e in data_entries)
     total_rows = sum(e.record_count for e in data_entries)
     chunk_id = f"cluster-{curve}"
+    # a committed run of this job still holds every live row: nothing to redo
+    done = {
+        s["sequence_number"] for s in table.snapshots()
+        if s.get("operation") == "cluster"
+        and s["summary"].get("job_id") == job_id
+        and s["summary"].get("curve") == curve
+    }
+    if all(e.seq in done for e in data_entries):
+        return {"files_in": 0, "files_out": 0, "rows": 0, "skipped": True}
     if log is not None:
-        if chunk_id in log.done_chunk_ids(job_id):
-            return {"files_in": 0, "files_out": 0, "rows": 0, "skipped": True}
         log.log_planned(
             job_id, "cluster",
             [{"chunk_id": chunk_id, "rows": total_rows, "bytes_in": total_bytes}],

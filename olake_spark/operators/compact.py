@@ -13,10 +13,12 @@ ingest inevitably leaves small files. This operator:
    shuffle task per bin, ≈target-sized output files written through
    `Table._stage_write`; then swaps bins in atomic rewrite snapshots,
    COMMIT_GROUP bins per snapshot;
-4. logs per-chunk lineage to the maintenance log; a rerun with the same
-   job_id skips bins already logged done (idempotent resume — the analogue of
-   state.RemoveChunk, types/state.go:187-230), and keeps the output of its
-   own commits that a kill left unlogged out of the re-plan.
+4. logs per-chunk lineage to the maintenance log, and resumes from the
+   table's own commits (the analogue of state.RemoveChunk,
+   types/state.go:187-230): a committed bin cannot re-plan, because its
+   input files have left the table, and while the job's newest commit says
+   bins are left, the re-plan keeps the job's own output out, so a resumed
+   run executes only the remaining bins.
 
 Each task holds one bin — at 10^12-image scale no task ever holds more than
 ~target bytes of encoded pixels.
@@ -339,14 +341,16 @@ def _run_bulk(
     )
 
     # commit in groups: one snapshot swaps a group of bins atomically, one
-    # batched log append records their lineage. Resume granularity stays
-    # bin-level (done chunk ids); an interrupted group redoes as a unit.
-    executed = 0
-    rows_out = bytes_out = 0
+    # batched log append records their lineage. A commit that leaves bins
+    # of this run uncommitted says how many (`bins-left`), so a resume knows
+    # to keep this run's output out of its re-plan (`_resume_exclude`); an
+    # interrupted group redoes as a unit.
+    executed = rows_out = bytes_out = 0
     for g in range(0, len(todo), COMMIT_GROUP):
         group = list(enumerate(todo))[g : g + COMMIT_GROUP]
         removed = {f.file_path for _, b in group for f in b.files}
         added = [e for i, _ in group for e in per_bin.get(i, [])]
+        left = len(todo) - g - len(group)
         committed = False
         try:
             snap = table.rewrite_files(
@@ -354,6 +358,7 @@ def _run_bulk(
                 extra_summary={
                     "job_id": job_id,
                     "chunk_ids": [b.chunk_id for _, b in group],
+                    **({"bins-left": left} if left else {}),
                 },
                 seq_used=seq,
                 known_delete_paths=pinned_delete_paths,
@@ -409,34 +414,23 @@ def _run_bulk(
     }
 
 
-def _unlogged_output(
-    table: Table, job_id: str, log: MaintenanceLog, done: set[str]
-) -> set[str]:
-    """Resume after a kill between a group's commit and its log append: the
-    live data files written by this job's `compact` snapshots whose chunks
-    the log has not marked done, for the re-plan to leave out (at a high
-    fill ratio that output is itself small, and would be packed again with
-    its partition's leftovers). Those chunks count as done. Empty when every
-    planned chunk of the job is done or committed: such a job plans from
-    scratch, because a job id may be reused for a later run."""
-    unlogged = [
-        s for s in table.snapshots()
-        if s.get("operation") == "compact"
-        and s["summary"].get("job_id") == job_id
-        and not set(s["summary"].get("chunk_ids", ())) <= done
-    ]
-    if not unlogged:
-        return set()
-    committed = {c for s in unlogged for c in s["summary"]["chunk_ids"]}
-    if not log.planned_chunk_ids(job_id) - done - committed:
-        return set()
-    # a run stamps every group's output with one sequence number, so this
-    # also keeps out the output of that run's groups that were logged
-    seqs = {s["sequence_number"] for s in unlogged}
+def _resume_exclude(table: Table, job_id: str) -> set[str]:
+    """The live output of the job's trailing `compact` snapshots that
+    record `bins-left`: the run a kill or conflict stopped midway (and its
+    stopped resumes), kept out of the resume's plan, where at a high fill
+    ratio it would be packed again with its partition's leftovers. Empty
+    once the job's newest `compact` snapshot has no `bins-left`."""
+    seqs = set()  # a run stamps every group's output with one seq
+    for s in reversed(table.snapshots()):
+        if s.get("operation") != "compact" or s["summary"].get("job_id") != job_id:
+            continue
+        if not s["summary"].get("bins-left"):
+            break
+        seqs.add(s["sequence_number"])
     return {
         e.file_path for e in table.entries()
         if e.content == DATA and e.seq in seqs
-    }
+    } if seqs else set()
 
 
 def run_compaction(
@@ -445,8 +439,6 @@ def run_compaction(
     log: MaintenanceLog | None = None,
     target_bytes: int | None = None,
     fill_ratio: float = 0.5,
-    max_bins: int | None = None,
-    stop_after_bins: int | None = None,
     verify: bool = False,
     sort: bool | None = None,
     predicates: list[tuple[str, str, object]] | None = None,
@@ -476,9 +468,10 @@ def run_compaction(
     with executors; a one-bin plan pays one shuffle of at most `target`
     bytes.
 
-    `stop_after_bins` exists for resume tests: simulate an interruption after
-    k committed bins. `bins_planned` counts the bins of the (last) plan,
-    including ones a log marks done.
+    Resumable by `job_id` alone, with or without `log`: a rerun after a kill
+    plans only the bins the killed run left (`_resume_exclude`); when none
+    of them is left, it plans from scratch.
+    `bins_planned` counts the bins of the (last) plan.
     """
     table.refresh()
     if sort is None:
@@ -502,27 +495,22 @@ def run_compaction(
         # conflict instead (ADVICE round 1; Iceberg's
         # RewriteFiles.validateNoNewDeleteFiles semantics)
         pin_snapshot = table.current_snapshot_id
-        done = log.done_chunk_ids(job_id) if log is not None else set()
-        own = _unlogged_output(table, job_id, log, done) if log is not None else set()
+        exclude = _resume_exclude(table, job_id)
         bins = plan_compaction(
-            table, target_bytes, fill_ratio, predicates=predicates, exclude=own
+            table, target_bytes, fill_ratio, predicates=predicates, exclude=exclude
         )
-        if max_bins:
-            bins = bins[:max_bins]
-        todo = [b for b in bins if b.chunk_id not in done]
-        if attempt == 0:
-            skipped = len(bins) - len(todo)
-        if log is not None and todo:
+        if not bins and exclude:
+            # the stopped run has no bins left: this run starts afresh
+            bins = plan_compaction(table, target_bytes, fill_ratio, predicates=predicates)
+        if not bins:
+            break
+        if log is not None:
             log.log_planned(
                 job_id, "compact",
                 [{"chunk_id": b.chunk_id, "partition": b.partition_json,
                   "rows": b.total_rows, "bytes_in": b.total_bytes}
-                 for b in todo],
+                 for b in bins],
             )
-        if stop_after_bins is not None:
-            todo = todo[: stop_after_bins - executed]
-        if not todo:
-            break
         pinned_dels = {
             e.file_path
             for e in table.entries(pin_snapshot)
@@ -530,7 +518,7 @@ def run_compaction(
         }
         try:
             res = _run_bulk(
-                table, job_id, log, todo, target_bytes, pin_snapshot,
+                table, job_id, log, bins, target_bytes, pin_snapshot,
                 verify, pinned_dels, sort,
             )
         except CommitConflict as ce:
@@ -549,7 +537,6 @@ def run_compaction(
     return {
         "bins_planned": len(bins),
         "bins_executed": executed,
-        "bins_skipped": skipped,
         "rows_rewritten": rows_out,
         "bytes_out": bytes_out,
         "delete_files_purged": purge_dead_deletes(table) if executed else 0,

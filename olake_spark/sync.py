@@ -6,8 +6,9 @@ apply, with chunk-granular resumable state (SURVEY.md §3.1). Here:
 - `backfill`: equal-frequency key ranges via approxQuantile (the Spark
   rendition of splitVector/bucketAuto/numeric-range chunking, S2/S3/S6),
   ONE staged write of all pending chunks (rows routed to their chunk id),
-  per-chunk-group atomic commits + lineage log; a rerun with the same job_id
-  plans only chunks not yet logged done — the reference's
+  per-chunk-group atomic commits + lineage log; each commit records how many
+  plan chunks have landed in an idempotent-writer txn, so a rerun with the
+  same job_id writes only the chunks after that prefix — the reference's
   state.SetChunks/RemoveChunk loop (types/state.go:187-230,
   drivers/abstract/backfill.go:16-68).
 - `apply_cdc_stream`: bounded Structured-Streaming drain of a change feed,
@@ -18,6 +19,7 @@ apply, with chunk-granular resumable state (SURVEY.md §3.1). Here:
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame
@@ -102,10 +104,6 @@ def _lexicographic_key(source: DataFrame, key_cols: list[str]) -> bool:
     return not isinstance(dt, (NumericType, TimestampType))
 
 
-def _chunk_id(job_id: str, lo, hi) -> str:
-    return f"chunk-{lo}-{hi}"
-
-
 def route_to_chunks(
     source: DataFrame, key_cols: list[str], todo: list[tuple]
 ) -> DataFrame:
@@ -168,60 +166,69 @@ def backfill(
     columns — a lexicographic composite key (S8): chunk membership is a
     Catalyst struct comparison, which Spark defines lexicographically, so
     string / multi-column PKs chunk exactly like the reference's
-    `(a, b) > (x, y)` walks."""
+    `(a, b) > (x, y)` walks. Resume state is one table property per job
+    id, plan and source, kept for good (expiry does not drop it)."""
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
     chunks = (
         plan_chunks_multi(source, key_cols, n_chunks)
         if _lexicographic_key(source, key_cols)
         else plan_chunks(source, key_cols[0], n_chunks)
     )
-    done = log.done_chunk_ids(job_id) if log is not None else set()
-    todo = [(lo, hi) for lo, hi in chunks if _chunk_id(job_id, lo, hi) not in done]
-    if log is not None and todo:
-        log.log_planned(
-            job_id, "backfill",
-            [{"chunk_id": _chunk_id(job_id, lo, hi)} for lo, hi in todo],
-        )
+    # resume: the txn counts the plan chunks landed (groups commit in plan
+    # order: a prefix); a changed plan or source gets a new key and runs in
+    # full. A source without input files is named by its keys' count + hash
+    ident = sorted(source.inputFiles()) or tuple(source.select(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*key_cols).cast("decimal(38,0)")),
+    ).first())
+    digest = hashlib.sha1(repr((chunks, ident)).encode()).hexdigest()[:12]
+    txn_key = f"backfill-{job_id}-{digest}"
+    table.refresh()
+    done = int(table.meta["properties"].get(f"txn.{txn_key}", 0))
+    todo = chunks[done:]
+    ids = [f"chunk-{lo}-{hi}" for lo, hi in todo]
     if not todo:
         return {"chunks_planned": len(chunks), "chunks_executed": 0,
                 "chunks_skipped": len(chunks)}
+    if log is not None:
+        log.log_planned(job_id, "backfill", [{"chunk_id": c} for c in ids])
 
     # route each row to its pending chunk; rows of done chunks are filtered
     # out BEFORE the write (resume re-reads the source but rewrites nothing)
     df = route_to_chunks(source, key_cols, todo)
 
-    table.refresh()
     seq = table.meta["last_sequence_number"] + 1
     # one task per pending chunk: the chunk index is the shuffle partition id
     per_chunk = table._stage_write(
         df.repartitionById(len(todo), F.col("_chunk_").cast("int")), seq,
         max_records_per_file, group_col="_chunk_",
     )
-    rows_total = sum(e.record_count for es in per_chunk.values() for e in es)
 
-    executed = 0
+    executed = rows_total = 0
     for g in range(0, len(todo), COMMIT_GROUP):
-        group = list(enumerate(todo))[g : g + COMMIT_GROUP]
-        added = [e for i, _ in group for e in per_chunk.get(i, [])]
-        table._commit_snapshot(
+        group = range(g, min(g + COMMIT_GROUP, len(todo)))
+        added = [e for i in group for e in per_chunk.get(i, [])]
+        # a racing run of the same plan may have landed this group first:
+        # the commit is then skipped and its staged files removed
+        snap = table._commit_snapshot(
             "append", added,
-            extra_summary={"job_id": job_id,
-                           "chunk_ids": [_chunk_id(job_id, lo, hi)
-                                         for _, (lo, hi) in group]},
-            seq_used=seq,
+            extra_summary={"job_id": job_id, "chunk_ids": [ids[i] for i in group]},
+            seq_used=seq, txn=(txn_key, done + group.stop),
         )
+        if snap.get("skipped"):
+            continue
         executed += len(group)
+        rows_total += sum(e.record_count for e in added)
         if log is not None:
-            log.log_done_many(
-                job_id, "backfill",
-                [{"chunk_id": _chunk_id(job_id, lo, hi),
-                  "rows": sum(e.record_count for e in per_chunk.get(i, []))}
-                 for i, (lo, hi) in group],
-            )
+            log.log_done_many(job_id, "backfill", [
+                {"chunk_id": ids[i],
+                 "rows": sum(e.record_count for e in per_chunk.get(i, []))}
+                for i in group
+            ])
     return {
         "chunks_planned": len(chunks),
         "chunks_executed": executed,
-        "chunks_skipped": len(chunks) - len(todo),
+        "chunks_skipped": done,
         "rows_written": rows_total,
     }
 
@@ -286,8 +293,6 @@ def _txn_app_id(kind: str, checkpoint_dir: str) -> str:
     """Stable idempotent-writer app id for a streaming sink: derived from
     the checkpoint path, so restarts of the same query share it while two
     different queries writing the same table never collide."""
-    import hashlib
-
     digest = hashlib.md5(
         os.path.abspath(checkpoint_dir).encode()
     ).hexdigest()[:12]

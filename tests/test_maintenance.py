@@ -67,20 +67,84 @@ class TestCompaction:
         assert row_sets_equal(before, after)
         assert after.count() == N - 20
 
-    def test_resume_skips_done_bins(self, spark, fragmented_table, tmp_table_dir):
+    def test_resume_skips_done_bins(self, spark, fragmented_table,
+                                    tmp_table_dir, monkeypatch):
+        """Kill a compaction at its second group's commit, after the first
+        group's log append: the rerun executes only the remaining bins and
+        leaves the first group's output live. Equality deletes on every
+        other row halve that output, so a plan from scratch would pack it
+        again with the rest of its partition."""
+        from olake_spark.operators import compact
+
+        monkeypatch.setattr(compact, "COMMIT_GROUP", 1)
         t = fragmented_table
+        t.row_delta(None, spark.createDataFrame(
+            [(f"img-{i:012d}",) for i in range(0, N, 2)], ["image_id"]
+        ))
         log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "mlog"))
         expected = t.scan().select("image_id", "phash")
-        planned = plan_compaction(t, TARGET, fill_ratio=1.0)
-        r1 = run_compaction(t, "job-r", log=log, fill_ratio=1.0, stop_after_bins=1)
-        assert r1["bins_executed"] == 1
-        assert r1["bins_planned"] == len(planned) > 1
-        # "crash" happened; rerun same job_id → already-done bin skipped
+        n_bins = len(plan_compaction(t, TARGET, fill_ratio=1.0))
+        assert n_bins > 1
+        live_before = {e.file_path for e in data_files(t)}
+        rewrite_files, calls = t.rewrite_files, []
+
+        def crash_at_second_commit(*a, **kw):
+            calls.append(1)
+            if len(calls) == 2:
+                raise OSError("injected crash at the second group's commit")
+            return rewrite_files(*a, **kw)
+
+        with monkeypatch.context() as m:
+            m.setattr(t, "rewrite_files", crash_at_second_commit)
+            with pytest.raises(OSError, match="injected crash"):
+                run_compaction(t, "job-r", log=log, fill_ratio=1.0)
+        t.refresh()
+        first = {e.file_path for e in data_files(t)} - live_before
+        assert first and len(log.done_chunk_ids("job-r")) == 1
+
         r2 = run_compaction(t, "job-r", log=log, fill_ratio=1.0)
-        assert r2["bins_skipped"] >= 0  # surviving bins may re-plan differently
+        assert r2["bins_executed"] == r2["bins_planned"] == n_bins - 1
+        assert first <= {e.file_path for e in data_files(t)}
         assert row_sets_equal(expected, t.scan().select("image_id", "phash"))
-        done = log.done_chunk_ids("job-r")
-        assert len(done) == r1["bins_executed"] + r2["bins_executed"]
+        assert len(log.done_chunk_ids("job-r")) == n_bins
+
+    def test_resume_keeps_out_only_the_stopped_run(self, spark,
+                                                   fragmented_table,
+                                                   monkeypatch):
+        """A job id reused every night: after a stopped night, the resume
+        keeps that night's output out of its plan, but not the output of
+        the job's earlier finished nights."""
+        from olake_spark.operators import compact
+
+        monkeypatch.setattr(compact, "COMMIT_GROUP", 1)
+        t = fragmented_table
+        assert run_compaction(t, "nightly", fill_ratio=1.0)["bins_executed"] > 0
+        assert compact._resume_exclude(t, "nightly") == set()
+        datagen.fragmented_append(
+            t, datagen.gen_images_df(spark, 2 * N).filter(
+                F.col("image_id") >= f"img-{N:012d}"
+            ), N, n_files=40,
+        )
+        expected = t.scan().select("image_id", "phash")
+        before = {e.file_path for e in data_files(t)}
+        rewrite_files, calls = t.rewrite_files, []
+
+        def crash_at_second_commit(*a, **kw):
+            calls.append(1)
+            if len(calls) == 2:
+                raise OSError("injected crash at the second group's commit")
+            return rewrite_files(*a, **kw)
+
+        with monkeypatch.context() as m:
+            m.setattr(t, "rewrite_files", crash_at_second_commit)
+            with pytest.raises(OSError, match="injected crash"):
+                run_compaction(t, "nightly", fill_ratio=1.0)
+        t.refresh()
+        stopped = {e.file_path for e in data_files(t)} - before
+        assert stopped and compact._resume_exclude(t, "nightly") == stopped
+        assert run_compaction(t, "nightly", fill_ratio=1.0)["bins_executed"] > 0
+        assert compact._resume_exclude(t, "nightly") == set()
+        assert row_sets_equal(expected, t.scan().select("image_id", "phash"))
 
     def test_plan_is_metadata_only(self, fragmented_table):
         bins = plan_compaction(fragmented_table, TARGET, fill_ratio=1.0)

@@ -77,6 +77,49 @@ class TestClusterResume:
         r2 = run_cluster_rewrite(t, "cjob", curve="zorder", log=log)
         assert r2.get("skipped") is True
 
+    def test_committed_job_skips_without_log_until_expired(self, spark,
+                                                           tmp_table_dir):
+        """The table's own cluster commit marks the job done: a rerun skips
+        with no log while that commit's output holds every live row, and
+        re-clusters once expiry has dropped that commit."""
+        from olake_spark.operators.expire import run_expire
+
+        t = Table.create(
+            spark, os.path.join(tmp_table_dir, "cr2"), datagen.IMAGES_SCHEMA,
+            identifier_fields=("image_id",),
+        )
+        t.append(datagen.gen_images_df(spark, 100))
+        assert run_cluster_rewrite(t, "cjob", curve="zorder")["rows"] == 100
+        assert run_cluster_rewrite(t, "cjob", curve="zorder").get("skipped") is True
+        # deletes leave the clustered files in place: still done
+        t.row_delta(None, spark.createDataFrame(
+            [("img-000000000003",)], "image_id string"
+        ))
+        assert run_cluster_rewrite(t, "cjob", curve="zorder").get("skipped") is True
+        run_expire(t, keep_last=1, grace_seconds=0)
+        again = run_cluster_rewrite(t, "cjob", curve="zorder")
+        assert again.get("skipped") is None and again["files_in"] > 0
+        assert t.scan().count() == 99
+
+    def test_reused_job_id_clusters_new_data(self, spark, tmp_table_dir):
+        """A nightly job id reused without a log: data appended after the
+        job's cluster commit is clustered by the next run."""
+        t = Table.create(
+            spark, os.path.join(tmp_table_dir, "cr3"), datagen.IMAGES_SCHEMA,
+            identifier_fields=("image_id",),
+        )
+        t.append(datagen.gen_images_df(spark, 100))
+        assert run_cluster_rewrite(t, "nightly", curve="zorder")["rows"] == 100
+        # another curve is another chunk of the job
+        assert run_cluster_rewrite(t, "nightly", curve="hilbert")["rows"] == 100
+        t.append(datagen.gen_images_df(spark, 120).filter(
+            F.col("image_id") >= "img-000000000100"
+        ))
+        again = run_cluster_rewrite(t, "nightly", curve="hilbert")
+        assert again.get("skipped") is None and again["rows"] == 120
+        assert run_cluster_rewrite(t, "nightly", curve="hilbert").get("skipped") is True
+        assert t.scan().count() == 120
+
 
 class TestPartialBatchGuard:
     def test_missing_data_column_raises_without_opt_in(self, spark, tmp_table_dir):

@@ -19,7 +19,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from olake_spark import datagen
+from olake_spark import datagen, sync
 from olake_spark.checkpoint import MaintenanceLog
 from olake_spark.icelite import (FakeObjectStoreFileIO, LocalFileIO,
                                  PartitionField, PartitionSpec, Table)
@@ -28,6 +28,7 @@ from olake_spark.operators import compact
 from olake_spark.operators.cluster import run_cluster_rewrite
 from olake_spark.operators.compact import (rewrite_position_deletes,
                                            run_compaction)
+from olake_spark.operators.expire import run_expire
 from olake_spark.operators.merge import merge_into
 from olake_spark.streaming.table_sink import write_table_stream
 from olake_spark.sync import backfill
@@ -143,7 +144,8 @@ class TestObjectStoreFlow:
             op()
             check(io.counts)
 
-    def test_orphan_reap_bounded_and_distributed(self, spark, tmp_table_dir):
+    def test_orphan_reap_bounded_and_distributed(self, spark, tmp_table_dir,
+                                                 monkeypatch):
         io = FakeObjectStoreFileIO()
         t = _mk_table(spark, os.path.join(tmp_table_dir, "reap"), io)
         run_compaction(t, "reap-c", fill_ratio=1.0, target_bytes=TARGET)
@@ -151,12 +153,14 @@ class TestObjectStoreFlow:
         expected = t.remove_orphan_files(grace_seconds=0, dry_run=True)
         assert expected  # compaction + expire left real orphans
 
+        monkeypatch.setattr(Table, "DISTRIBUTED_LIST_THRESHOLD", 0)
         io.counts.clear()
-        got = t.remove_orphan_files(grace_seconds=0, distributed=True)
+        got = t.remove_orphan_files(grace_seconds=0)
         assert got == expected
-        # distributed mode: the driver never walked the tree, listed only
-        # first-level dirs, and deleted everything in ONE batched call
-        assert io.counts["walk_files"] == 0
+        # distributed listing: the driver's walk stopped at the first file
+        # past the threshold, listed only first-level dirs, and deleted
+        # everything in ONE batched call
+        assert io.counts["walk_files"] == 1
         assert io.counts["remove_many"] == 1
         assert io.counts["remove"] == 0
         after = t.remove_orphan_files(grace_seconds=0, dry_run=True)
@@ -251,15 +255,15 @@ class TestObjectStoreFlow:
         t.append(added, max_records_per_file=10)
         assert row_sets_equal(added.select(*COLS), t.scan().select(*COLS))
 
-    def test_local_and_distributed_listings_agree(self, spark, tmp_table_dir):
+    def test_local_and_distributed_listings_agree(self, spark, tmp_table_dir,
+                                                  monkeypatch):
         t = _mk_table(spark, os.path.join(tmp_table_dir, "agree"),
                       FakeObjectStoreFileIO())
         run_compaction(t, "ag-c", fill_ratio=1.0, target_bytes=TARGET)
         t.expire_snapshots(keep_last=1)
-        local = t.remove_orphan_files(grace_seconds=0, dry_run=True,
-                                      distributed=False)
-        dist = t.remove_orphan_files(grace_seconds=0, dry_run=True,
-                                     distributed=True)
+        local = t.remove_orphan_files(grace_seconds=0, dry_run=True)
+        monkeypatch.setattr(Table, "DISTRIBUTED_LIST_THRESHOLD", 0)
+        dist = t.remove_orphan_files(grace_seconds=0, dry_run=True)
         assert local == dist and local
 
 
@@ -441,6 +445,93 @@ class TestFaultAfterWrite:
         assert all(os.path.exists(t._abs(e.file_path)) for e in t.entries())
         assert row_sets_equal(before, t.scan().select(*COLS))
         assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
+
+    @pytest.mark.parametrize("expire", [False, True])
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_backfill_kill_between_commit_and_log(self, spark, tmp_table_dir,
+                                                  monkeypatch, io_cls, expire):
+        """Kill a backfill after its first group's commit, before that
+        group's maintenance-log append: a rerun of the same job — also after
+        an expiry that drops every snapshot but the current one — writes
+        only the chunks that did not land, so no row is appended twice."""
+        monkeypatch.setattr(sync, "COMMIT_GROUP", 1)
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "kbf"), io_cls())
+        before = t.scan().select(*COLS).localCheckpoint()
+        new = new_rows(spark)
+        log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "log"))
+
+        def crash(*_a, **_kw):
+            raise OSError("injected crash before the log append")
+
+        with monkeypatch.context() as m:
+            m.setattr(log, "log_done_many", crash)
+            with pytest.raises(OSError, match="injected crash"):
+                backfill(t, new, "phash", "kbf", log=log, n_chunks=4)
+        t.refresh()
+        assert t.snapshot()["summary"]["job_id"] == "kbf"
+        assert log.done_chunk_ids("kbf") == set()
+        if expire:
+            run_expire(t, keep_last=1, grace_seconds=0)
+
+        res = backfill(t, new, "phash", "kbf", log=log, n_chunks=4)
+        assert res["chunks_planned"] >= 2 and res["chunks_skipped"] == 1
+        assert res["chunks_executed"] == res["chunks_planned"] - 1
+        got = t.scan().select(*COLS)
+        assert got.count() == got.select("image_id").distinct().count()
+        assert row_sets_equal(before.unionByName(new.select(*COLS)), got)
+
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_backfill_without_log_appends_once(self, spark, tmp_table_dir,
+                                               monkeypatch, io_cls):
+        """Without a maintenance log, a second backfill under the same job
+        id appends nothing, and so does a duplicate run that races the
+        first: its commits are skipped and its staged files removed."""
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "bfo"), io_cls())
+        expected = t.scan().select(*COLS).unionByName(
+            new_rows(spark).select(*COLS)
+        ).localCheckpoint()
+        stage_write, raced = t._stage_write, []
+
+        def race(*a, **kw):
+            staged = stage_write(*a, **kw)
+            if not raced:  # the rival run lands every chunk first
+                raced.append(None)
+                raced[0] = backfill(t, new_rows(spark), "phash", "bfo",
+                                    n_chunks=4)
+            return staged
+
+        monkeypatch.setattr(t, "_stage_write", race)
+        loser = backfill(t, new_rows(spark), "phash", "bfo", n_chunks=4)
+        monkeypatch.undo()
+        assert raced[0]["chunks_executed"] == raced[0]["chunks_planned"] >= 2
+        assert loser["chunks_executed"] == 0
+        again = backfill(t, new_rows(spark), "phash", "bfo", n_chunks=4)
+        assert again["chunks_executed"] == 0
+        assert again["chunks_skipped"] == again["chunks_planned"]
+        assert row_sets_equal(expected, t.scan().select(*COLS))
+        assert t.remove_orphan_files(grace_seconds=0, dry_run=True) == []
+
+    @pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+    def test_backfill_of_another_source_under_one_job_id(
+        self, spark, tmp_table_dir, io_cls
+    ):
+        """A one-chunk plan is the same for every source, so the resume key
+        also names the source: a second source of equal size under the
+        same job id is appended, not skipped."""
+        t = _mk_table(spark, os.path.join(tmp_table_dir, "bfs"), io_cls())
+        rows = datagen.gen_images_df(spark, N + 80)
+        first = rows.filter(F.col("image_id").between(
+            f"img-{N:012d}", f"img-{N + 39:012d}"
+        ))
+        second = rows.filter(F.col("image_id") >= f"img-{N + 40:012d}")
+        expected = t.scan().select(*COLS).unionByName(
+            rows.filter(F.col("image_id") >= f"img-{N:012d}").select(*COLS)
+        ).localCheckpoint()
+        for src in (first, second, second):
+            backfill(t, src, "phash", "bfs", n_chunks=1)
+        got = t.scan().select(*COLS)
+        assert got.count() == got.select("image_id").distinct().count()
+        assert row_sets_equal(expected, got)
 
     def test_hard_crash_leftovers_are_reaped(self, spark, tmp_table_dir):
         """A hard crash (no in-process abort path) can leave promoted-but-
