@@ -64,6 +64,26 @@ _PA_SCHEMA = pa.schema(
 )
 
 
+def done_rows(job_id: str, op: str, chunks: list[dict]) -> list[dict]:
+    """The log rows marking `chunks` of `job_id` done now."""
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    return [
+        {"job_id": job_id, "op": op, "status": "done", "finished_at": now, **c}
+        for c in chunks
+    ]
+
+
+def _rows_table(rows: list[dict]) -> pa.Table:
+    """Log rows as one pyarrow table; absent optional fields are null and
+    `started_at` defaults to now."""
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    rows = [{"started_at": now, **r} for r in rows]
+    return pa.table(
+        {f.name: [r.get(f.name) for r in rows] for f in _PA_SCHEMA},
+        schema=_PA_SCHEMA,
+    )
+
+
 class MaintenanceLog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -77,29 +97,58 @@ class MaintenanceLog:
     def _append_rows(self, rows: list[dict]) -> None:
         """Driver-side parquet append (no Spark job) through the same atomic
         snapshot commit as any other write."""
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        for r in rows:
-            r.setdefault("partition", None)
-            r.setdefault("rows", None)
-            r.setdefault("bytes_in", None)
-            r.setdefault("bytes_out", None)
-            r.setdefault("snapshot_before", None)
-            r.setdefault("snapshot_after", None)
-            r.setdefault("started_at", now)
-            r.setdefault("finished_at", None)
-        cols = {f.name: [r.get(f.name) for r in rows] for f in _PA_SCHEMA}
+        self.table.refresh()
+        entry, seq = self._write_file(_rows_table(rows))
+        self.table._commit_snapshot("append", [entry], seq_used=seq)
+
+    def _write_file(self, rows: pa.Table) -> tuple[FileEntry, int]:
+        """Write `rows` as one data file of the log at the next sequence
+        number; returns its manifest entry and that number."""
         t = self.table
-        t.refresh()
         seq = t.meta["last_sequence_number"] + 1
         dest = os.path.join(t.root, "data", f"{seq:06d}-{uuid.uuid4().hex}.parquet")
-        pq.write_table(pa.table(cols, schema=_PA_SCHEMA), dest)
+        pq.write_table(rows, dest)
         st = footer_stats(dest)
         entry = FileEntry(
             DATA, os.path.relpath(dest, t.root), {}, seq,
             st["record_count"], st["file_size_bytes"],
             st["mins"], st["maxs"], st["null_counts"],
         )
-        t._commit_snapshot("append", [entry], seq_used=seq)
+        return entry, seq
+
+    def fold(self, rows: list[dict] = ()) -> int:
+        """Rewrite the log's live data files, in log order and followed by
+        `rows`, into one data file under one manifest: one driver-side
+        pyarrow pass and one commit (no Spark job). Every append adds a
+        data file and a manifest, so without this a long-lived log grows
+        without bound; `run_expire(log=…)` folds it, with its own lineage
+        row, before expiring its snapshots. Returns the number of files
+        folded (0, and no commit, when there was one or none and no row)."""
+        t = self.table
+        t.refresh()
+        entries = t.entries()
+        if len(entries) <= 1 and not rows:
+            return 0
+        self._check_append_only(entries)
+        parts = [pq.read_table(t._abs(e.file_path), schema=_PA_SCHEMA) for e in entries]
+        if rows:
+            parts.append(_rows_table(rows))
+        entry, seq = self._write_file(pa.concat_tables(parts))
+        t.rewrite_files(
+            {e.file_path for e in entries}, [entry], op="fold", seq_used=seq
+        )
+        return len(entries)
+
+    def _check_append_only(self, entries: list[FileEntry]) -> None:
+        """Only this class writes the log, and it adds data files alone: a
+        delete file here means another writer touched it, and a driver-side
+        read that skips it would return deleted rows."""
+        if any(e.content != DATA for e in entries):
+            raise ValueError(
+                f"maintenance log {self.table.root}: snapshot "
+                f"{self.table.current_snapshot_id} holds delete files; the "
+                "log is append-only"
+            )
 
     def log_planned(self, job_id: str, op: str, chunks: list[dict]) -> None:
         self._append_rows(
@@ -111,28 +160,14 @@ class MaintenanceLog:
 
     def log_done_many(self, job_id: str, op: str, chunks: list[dict]) -> None:
         """One atomic log append for a batch of finished chunks."""
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        self._append_rows(
-            [
-                {"job_id": job_id, "op": op, "status": "done",
-                 "finished_at": now, **c}
-                for c in chunks
-            ]
-        )
+        self._append_rows(done_rows(job_id, op, chunks))
 
     def done_chunk_ids(self, job_id: str) -> set[str]:
         """Chunk ids logged `done` for `job_id`, read on the driver with
-        pyarrow from the log's live data files (no Spark job). Only
-        `_append_rows` writes the log, and it adds data files alone: a
-        delete file here means another writer touched it, and a read that
-        skips it would return deleted rows."""
+        pyarrow from the log's live data files (no Spark job)."""
         t = self.table
         entries = t.entries()
-        if any(e.content != DATA for e in entries):
-            raise ValueError(
-                f"maintenance log {t.root}: snapshot {t.current_snapshot_id} "
-                "holds delete files; the log is append-only"
-            )
+        self._check_append_only(entries)
         want = [("job_id", "==", job_id), ("status", "==", "done")]
         out: set[str] = set()
         for e in entries:

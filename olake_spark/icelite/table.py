@@ -163,11 +163,15 @@ class FileEntry:
 def _write_manifest(path: str, entries: list[FileEntry]) -> None:
     rows = [e.to_row() for e in entries]
     cols = {f.name: [r[f.name] for r in rows] for f in _MANIFEST_SCHEMA}
-    # no parquet column statistics: every reader loads the whole manifest
-    # and prunes on the parsed entries, so footer min/max copies of the
-    # *_json strings would only add bytes
+    # every reader loads the whole manifest and prunes on the parsed
+    # entries, and reads it back under _MANIFEST_SCHEMA's parquet types, so
+    # the footer holds neither column statistics (min/max copies of the
+    # *_json strings) nor the base64 Arrow schema; and no dictionary pages,
+    # whose columns (paths, stats JSON) are nearly all distinct. Manifests
+    # written with either still load.
     pq.write_table(
-        pa.table(cols, schema=_MANIFEST_SCHEMA), path, write_statistics=False
+        pa.table(cols, schema=_MANIFEST_SCHEMA), path, write_statistics=False,
+        store_schema=False, use_dictionary=False,
     )
 
 
@@ -1511,8 +1515,8 @@ class Table:
         pay a reconciliation join for it. Delete files are left in place:
         equality deletes kill strictly-older sequence numbers only (the
         replacement rows are newer), and positional deletes referencing
-        dropped files match nothing (purged by the next
-        `purge_dead_deletes`).
+        dropped files match nothing (dropped by the next compaction's
+        commit, or by `purge_dead_deletes`).
 
         Concurrency: a concurrent rewrite/removal of a file this commit
         drops raises CommitConflict inside the CAS and the overwrite
@@ -1794,7 +1798,8 @@ class Table:
         costs one predicate scan + one small (file_path, pos) write instead
         of rewriting every touched data file. Scans apply the marks as a
         broadcast anti-join; the next compaction of a touched file folds the
-        deletes in physically and `purge_dead_deletes` drops the dead files.
+        deletes in physically, and its commit drops the delete files left
+        dead (`compact.dead_deletes`).
 
         `condition` is a SQL string or Column over the table schema. The
         commit validates that every referenced data file is still live

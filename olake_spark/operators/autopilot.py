@@ -393,12 +393,9 @@ def _run_action(
 ) -> dict:
     op, params = act["op"], act["params"]
     if op == "rewrite-deletes":
-        from olake_spark.operators.compact import (purge_dead_deletes,
-                                                   rewrite_position_deletes)
+        from olake_spark.operators.compact import rewrite_position_deletes
 
-        out = rewrite_position_deletes(table)
-        out["dead_deletes_purged"] = purge_dead_deletes(table)
-        return out
+        return rewrite_position_deletes(table)
     if op == "compact":
         from olake_spark.operators.compact import run_compaction
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from olake_spark.checkpoint import MaintenanceLog
 from olake_spark.functions.zorder import hilbert_key_col, zorder_key_col
 from olake_spark.icelite.table import DATA, Table
+from olake_spark.operators.compact import dead_deletes
 
 SALT_BITS = 4  # 16 salt buckets inside each coarse key
 # the directory value Spark's partitioned writer gives a null or empty value
@@ -121,8 +122,10 @@ def run_cluster_rewrite(
     boundary_sample_rows: int = 1_000_000,
     verify: bool = False,
 ) -> dict:
-    """Rewrite the whole table clustered by the chosen curve key. Skipped,
-    log or no log, while every live data file is the output of a retained
+    """Rewrite the whole table clustered by the chosen curve key. The scan
+    applies every delete, so the commit also drops the delete files the
+    rewritten table leaves dead (`delete_files_purged`). Skipped, log or
+    no log, while every live data file is the output of a retained
     `cluster` snapshot of the same `job_id` and `curve`."""
     table.refresh()
     if target_bytes is None:
@@ -200,10 +203,18 @@ def run_cluster_rewrite(
     added = table._stage_write(
         clustered, seq, max_records_per_file=per_file, sort_within_by=[]
     )
+    dead = {
+        e.file_path for e in dead_deletes(
+            table, [e for e in entries if e.content != DATA] + added
+        )
+    }
     snap = table.rewrite_files(
-        {e.file_path for e in data_entries}, added, op="cluster",
-        extra_summary={"job_id": job_id, "curve": curve}, seq_used=seq,
-        known_delete_paths=pinned_dels,
+        {e.file_path for e in data_entries} | dead, added, op="cluster",
+        extra_summary={
+            "job_id": job_id, "curve": curve,
+            **({"purged-delete-files": len(dead)} if dead else {}),
+        },
+        seq_used=seq, known_delete_paths=pinned_dels,
     )
     if log is not None:
         log.log_done(
@@ -218,4 +229,5 @@ def run_cluster_rewrite(
         "files_out": len(added),
         "rows": total_rows,
         "curve": curve,
+        "delete_files_purged": len(dead),
     }

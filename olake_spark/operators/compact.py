@@ -12,7 +12,8 @@ ingest inevitably leaves small files. This operator:
    files (equality deletes applied → rewrite also *purges* deletes), one
    shuffle task per bin, ≈target-sized output files written through
    `Table._stage_write`; then swaps bins in atomic rewrite snapshots,
-   COMMIT_GROUP bins per snapshot;
+   COMMIT_GROUP bins per snapshot, the last of which also drops the delete
+   files the run's result leaves dead (no separate purge snapshot);
 4. logs per-chunk lineage to the maintenance log, and resumes from the
    table's own commits (the analogue of state.RemoveChunk,
    types/state.go:187-230): a committed bin cannot re-plan, because its
@@ -37,8 +38,9 @@ from olake_spark.icelite.table import (COMMIT_GROUP, DATA, EQ_DELETES,
                                        Table)
 
 
-def purge_dead_deletes(table: Table) -> int:
-    """Drop delete files that no longer apply to any live data file.
+def dead_deletes(table: Table, entries: list[FileEntry]) -> list[FileEntry]:
+    """The delete files among `entries` (one table state's live entries)
+    that no longer apply to any of its data files.
 
     Equality deletes: a delete at sequence d kills rows only in data files
     with seq < d; once compaction has rewritten every older file (rewrites
@@ -49,13 +51,11 @@ def purge_dead_deletes(table: Table) -> int:
     reference are live (rewrites mint new uuid paths). The per-file
     [min,max] file_path stats decide most cases without a read; only
     range-overlapping candidates get their referenced-path set read (small
-    files, dictionary-encoded path column). Metadata-only commit."""
+    files, dictionary-encoded path column)."""
     import bisect
 
     import pyarrow.parquet as _pq
 
-    table.refresh()
-    entries = table.entries()
     data_seqs = [e.seq for e in entries if e.content == DATA]
     min_seq = min(data_seqs) if data_seqs else float("inf")
     dead = [e for e in entries if e.content == EQ_DELETES and e.seq <= min_seq]
@@ -91,6 +91,16 @@ def purge_dead_deletes(table: Table) -> int:
             if _refs_live(e):
                 continue
         dead.append(e)
+    return dead
+
+
+def purge_dead_deletes(table: Table) -> int:
+    """Drop the current snapshot's `dead_deletes` in one metadata-only
+    commit. Compaction, clustering and position-delete consolidation drop
+    the deletes their own result kills in their rewrite commit; this
+    stand-alone action is for debt any other path left behind."""
+    table.refresh()
+    dead = dead_deletes(table, table.entries())
     if dead:
         table.rewrite_files(
             {e.file_path for e in dead}, [], op="purge-deletes",
@@ -116,10 +126,14 @@ def rewrite_position_deletes(
     Scale shape: ONE distributed pass over the delete rows (semi-join
     against a broadcast of live data paths — O(file count), the same
     cardinality every commit already walks), one shuffle to consolidate.
-    Commit removes the old delete files atomically; a concurrent compaction
-    that folded/purged any of them surfaces as CommitConflict (removal-set
-    validation) and the whole op re-plans from fresh metadata. Concurrent
-    NEW delete commits are untouched and stay live — no guard needed."""
+    Commit removes the old delete files atomically, together with the
+    equality deletes no live data file is older than (`dead_deletes`); a
+    concurrent compaction that folded/purged any of them surfaces as
+    CommitConflict (removal-set validation) and the whole op re-plans from
+    fresh metadata. Concurrent NEW delete commits are untouched and stay
+    live — no guard needed. With nothing to consolidate, the dead deletes
+    go in a `purge_dead_deletes` commit instead; `dead_deletes_purged`
+    counts them either way."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -135,6 +149,7 @@ def rewrite_position_deletes(
             return {
                 "rewritten_files": 0, "added_files": 0,
                 "old_marks": old_rows, "kept_marks": old_rows,
+                "dead_deletes_purged": purge_dead_deletes(table),
             }
         marks = table.spark.read.parquet(
             *[table._abs(e.file_path) for e in pos]
@@ -153,18 +168,27 @@ def rewrite_position_deletes(
         n_out = max(1, math.ceil(old_rows / target_rows_per_file))
         added = table._write_pos_delete_files(kept, seq, n_files=n_out)
         kept_rows = sum(e.record_count for e in added)
+        # the consolidated files mark rows of live data files only, so the
+        # result's dead deletes are equality deletes
+        dead = {
+            e.file_path for e in dead_deletes(
+                table, [e for e in entries if e.content != POS_DELETES]
+            )
+        }
         try:
             table.rewrite_files(
-                {e.file_path for e in pos}, added,
+                {e.file_path for e in pos} | dead, added,
                 op="rewrite-deletes", seq_used=seq,
                 extra_summary={
                     "rewritten-delete-files": len(pos),
                     "dropped-marks": old_rows - kept_rows,
+                    **({"purged-delete-files": len(dead)} if dead else {}),
                 },
             )
             return {
                 "rewritten_files": len(pos), "added_files": len(added),
                 "old_marks": old_rows, "kept_marks": kept_rows,
+                "dead_deletes_purged": len(dead),
             }
         except CommitConflict as ce:
             # a concurrent rewrite consumed one of the old delete files:
@@ -267,6 +291,10 @@ def plan_compaction(
     return bins
 
 
+# what _run_bulk counts, summed over run_compaction's attempts
+_TOTALS = ("bins_executed", "rows_rewritten", "bytes_out", "delete_files_purged")
+
+
 def _run_bulk(
     table: Table,
     job_id: str,
@@ -279,7 +307,9 @@ def _run_bulk(
     sort_output: bool,
 ) -> dict:
     """Rewrite `todo` in ONE Spark job, then commit it COMMIT_GROUP bins per
-    snapshot. Returns the executed bin, row and byte counts."""
+    snapshot; the last commit also drops the delete files the run's result
+    leaves dead. Returns the executed bin, row, byte and purged-delete
+    counts (`_TOTALS`)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -340,33 +370,47 @@ def _run_bulk(
         sort_within_by=None if sort_output else [], group_col="_bin_",
     )
 
+    # the delete files the whole run leaves dead: judged on the pinned
+    # entries less every planned input plus every bin's output, and dropped
+    # by the last group's commit. Should a delete land or go in between,
+    # that commit conflicts (known_delete_paths guard, removal validation).
+    dead = {
+        e.file_path for e in dead_deletes(
+            table,
+            [e for e in table.entries(pin_snapshot) if e.file_path not in rel_paths]
+            + [e for out in per_bin.values() for e in out],
+        )
+    }
+
     # commit in groups: one snapshot swaps a group of bins atomically, one
     # batched log append records their lineage. A commit that leaves bins
     # of this run uncommitted says how many (`bins-left`), so a resume knows
     # to keep this run's output out of its re-plan (`_resume_exclude`); an
     # interrupted group redoes as a unit.
-    executed = rows_out = bytes_out = 0
+    done = dict.fromkeys(_TOTALS, 0)
     for g in range(0, len(todo), COMMIT_GROUP):
         group = list(enumerate(todo))[g : g + COMMIT_GROUP]
         removed = {f.file_path for _, b in group for f in b.files}
         added = [e for i, _ in group for e in per_bin.get(i, [])]
         left = len(todo) - g - len(group)
+        summary = {"job_id": job_id, "chunk_ids": [b.chunk_id for _, b in group]}
+        if left:
+            summary["bins-left"] = left
+        elif dead:
+            removed |= dead
+            summary["purged-delete-files"] = len(dead)
         committed = False
         try:
             snap = table.rewrite_files(
-                removed, added, op="compact",
-                extra_summary={
-                    "job_id": job_id,
-                    "chunk_ids": [b.chunk_id for _, b in group],
-                    **({"bins-left": left} if left else {}),
-                },
-                seq_used=seq,
-                known_delete_paths=pinned_delete_paths,
+                removed, added, op="compact", extra_summary=summary,
+                seq_used=seq, known_delete_paths=pinned_delete_paths,
             )
             committed = True
-            executed += len(group)
-            rows_out += sum(e.record_count for e in added)
-            bytes_out += sum(e.file_size_bytes for e in added)
+            done["bins_executed"] += len(group)
+            done["rows_rewritten"] += sum(e.record_count for e in added)
+            done["bytes_out"] += sum(e.file_size_bytes for e in added)
+            if not left:
+                done["delete_files_purged"] = len(dead)
             if log is not None:
                 log.log_done_many(
                     job_id, "compact",
@@ -405,13 +449,9 @@ def _run_bulk(
             except OSError:
                 pass  # best effort; the reaper collects stragglers
             if conflict:
-                exc.partial = (executed, rows_out, bytes_out)
+                exc.partial = done
             raise
-    return {
-        "bins_executed": executed,
-        "rows_rewritten": rows_out,
-        "bytes_out": bytes_out,
-    }
+    return done
 
 
 def _resume_exclude(table: Table, job_id: str) -> set[str]:
@@ -471,7 +511,8 @@ def run_compaction(
     Resumable by `job_id` alone, with or without `log`: a rerun after a kill
     plans only the bins the killed run left (`_resume_exclude`); when none
     of them is left, it plans from scratch.
-    `bins_planned` counts the bins of the (last) plan.
+    `bins_planned` counts the bins of the (last) plan; `delete_files_purged`
+    the dead delete files the run's last commit dropped.
     """
     table.refresh()
     if sort is None:
@@ -487,7 +528,7 @@ def run_compaction(
     # deleted the uncommitted groups' outputs, and we re-plan the rest from
     # fresh metadata (which now includes the conflicting deletes, so the
     # redone bins read the post-delete row state)
-    executed = rows_out = bytes_out = 0
+    done = dict.fromkeys(_TOTALS, 0)
     for attempt in range(3):
         # the snapshot the rewrite reads; validateNoNewDeleteFiles guard:
         # rewrites re-seq their rows, so a delete that commits between this
@@ -522,22 +563,13 @@ def run_compaction(
                 verify, pinned_dels, sort,
             )
         except CommitConflict as ce:
-            p = getattr(ce, "partial", (0, 0, 0))
-            executed += p[0]
-            rows_out += p[1]
-            bytes_out += p[2]
+            for k, v in getattr(ce, "partial", {}).items():
+                done[k] += v
             if attempt == 2:
                 raise
             table.refresh()
             continue
-        executed += res["bins_executed"]
-        rows_out += res["rows_rewritten"]
-        bytes_out += res["bytes_out"]
+        for k, v in res.items():
+            done[k] += v
         break
-    return {
-        "bins_planned": len(bins),
-        "bins_executed": executed,
-        "rows_rewritten": rows_out,
-        "bytes_out": bytes_out,
-        "delete_files_purged": purge_dead_deletes(table) if executed else 0,
-    }
+    return {"bins_planned": len(bins), **done}

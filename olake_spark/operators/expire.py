@@ -27,11 +27,13 @@ re-implemented over icelite metadata (SURVEY.md §7 step 6):
 `run_expire` returns `snapshots_expired`, `orphans_removed` (0 on a dry
 run), `orphans_found` and `metadata_versions_removed` (0 on a dry run).
 
-Given a maintenance `log`, it expires the log table too: every snapshot but
-the newest (the log only appends, so the newest lists every manifest ever
-added and no row is lost), then the log's superseded metadata versions
-under the same grace. Without this, each logged chunk left one metadata
-version re-serializing every earlier snapshot.
+Given a maintenance `log`, it folds and expires the log table too: first
+`MaintenanceLog.fold` rewrites the log's data files (one per append) and
+this expiry's lineage row (with a `job_id`) into one file under one
+manifest, then every snapshot but the newest goes (the log only appends,
+so the newest holds every row), then the log's orphans and superseded
+metadata versions under the same grace. Without this, each logged chunk
+left a data file, a manifest and a metadata version behind.
 
 At deployment scale the physical listing is a distributed object-store list
 job; the reconciliation is the same set difference.
@@ -39,7 +41,7 @@ job; the reconciliation is the same set difference.
 
 from __future__ import annotations
 
-from olake_spark.checkpoint import MaintenanceLog
+from olake_spark.checkpoint import MaintenanceLog, done_rows
 from olake_spark.icelite.table import Table
 
 
@@ -76,20 +78,19 @@ def run_expire(
         "orphans_found": len(orphans),
         "metadata_versions_removed": 0 if dry_run else len(versions),
     }
-    if log is not None and job_id is not None:
-        log.log_done(
-            job_id,
-            "expire",
-            {
-                "chunk_id": f"expire-{table.current_snapshot_id}",
-                "rows": out["snapshots_expired"],
-                "bytes_out": out["orphans_removed"],
-                "snapshot_after": table.current_snapshot_id,
-            },
-        )
     if log is not None:
+        # the lineage row rides in the fold's commit
+        log.fold([] if job_id is None else done_rows(job_id, "expire", [{
+            "chunk_id": f"expire-{table.current_snapshot_id}",
+            "rows": out["snapshots_expired"],
+            "bytes_out": out["orphans_removed"],
+            "snapshot_after": table.current_snapshot_id,
+        }]))
         log.table.expire_snapshots(keep_last=1)
         if reap_orphans:
+            log.table.remove_orphan_files(
+                grace_seconds=grace_seconds, dry_run=dry_run
+            )
             log.table.remove_superseded_metadata(
                 grace_seconds=grace_seconds, dry_run=dry_run
             )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from olake_spark import datagen
 from olake_spark.checkpoint import MaintenanceLog
 from olake_spark.icelite import PartitionField, PartitionSpec, Table
-from olake_spark.icelite.table import DATA, EQ_DELETES, FileEntry
+from olake_spark.icelite.table import DATA, EQ_DELETES, POS_DELETES, FileEntry
 from olake_spark.operators.cluster import _range_groups, run_cluster_rewrite
 from olake_spark.operators.compact import plan_compaction, run_compaction
 from olake_spark.operators.expire import run_expire
@@ -219,6 +219,27 @@ class TestClustering:
         after = overlap_score()
         # clustering by a phash-prefixed curve must tighten per-file phash spans
         assert after < before
+
+    def test_drops_the_deletes_it_applies(self, spark, fragmented_table):
+        """The rewrite scans through every delete, so its one commit also
+        drops them all: later scans run no anti-join."""
+        t = fragmented_table
+        t.row_delta(None, spark.createDataFrame(
+            [(f"img-{i:012d}",) for i in range(0, N, 5)], ["image_id"]
+        ))
+        t.delete_where("cast(substring(image_id, 5, 12) as bigint) % 7 = 0")
+        dels = [e for e in t.entries() if e.content != DATA]
+        assert {e.content for e in dels} == {EQ_DELETES, POS_DELETES}
+        expected = t.scan().select("image_id", "caption", "phash").localCheckpoint()
+        n_snaps = len(t.snapshots())
+        res = run_cluster_rewrite(t, "job-del", curve="hilbert", target_bytes=TARGET)
+        assert len(t.snapshots()) == n_snaps + 1
+        assert t.snapshot()["operation"] == "cluster"
+        assert res["delete_files_purged"] == len(dels)
+        assert all(e.content == DATA for e in t.entries())
+        assert row_sets_equal(
+            expected, t.scan().select("image_id", "caption", "phash")
+        )
 
 
 class TestClusterLayout:
@@ -480,6 +501,93 @@ class TestManifestRewrite:
         ]
         assert cols and not any(c.is_stats_set for c in cols)
         assert _read_manifest(path) == entries
+
+    def test_manifest_footer_has_no_arrow_schema_or_dictionary(self, tmp_path):
+        import pyarrow.parquet as pq
+
+        from olake_spark.icelite.table import _write_manifest
+
+        entries = [
+            FileEntry(DATA, "data/f.parquet", {}, 1, 10, 100, {"w": 1},
+                      {"w": 9}, {"w": 0}, {"w": b"\x00" * 16})
+            for _ in range(4)  # repeated values: a dictionary would pay off
+        ]
+        path = str(tmp_path / "mf.parquet")
+        _write_manifest(path, entries)
+        md = pq.ParquetFile(path).metadata
+        assert b"ARROW:schema" not in (md.metadata or {})
+        cols = [
+            md.row_group(g).column(c)
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        ]
+        assert cols and not any(c.has_dictionary_page for c in cols)
+
+    def test_old_and_new_manifests_load_together(self, spark, fragmented_table,
+                                                 tmp_table_dir):
+        """One snapshot whose first manifest was written the old way (Arrow
+        schema and dictionary pages in the footer) and whose second is new
+        reads the same entries, ranges included, through every reader."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from olake_spark.icelite import table as icetable
+        from olake_spark.icelite.export import export_iceberg, import_iceberg
+
+        t = fragmented_table
+        datagen.fragmented_append(
+            t, datagen.gen_images_df(spark, N + 40).filter(
+                F.col("image_id") >= f"img-{N:012d}"
+            ), 40, n_files=4,
+        )
+        first, second = t.snapshot()["manifests"]
+        want = t.entries()
+        old = t._abs(first)
+        assert all(
+            any(e.ranges for e in icetable._read_manifest(t._abs(m)))
+            for m in (first, second)
+        )
+        rows = [e.to_row() for e in icetable._read_manifest(old)]
+        pq.write_table(
+            pa.table({f.name: [r[f.name] for r in rows]
+                      for f in icetable._MANIFEST_SCHEMA},
+                     schema=icetable._MANIFEST_SCHEMA),
+            old, write_statistics=False,
+        )
+        assert b"ARROW:schema" in pq.ParquetFile(old).metadata.metadata
+        assert b"ARROW:schema" not in (
+            pq.ParquetFile(t._abs(second)).metadata.metadata or {}
+        )
+        icetable._MANIFEST_CACHE.clear()
+
+        assert t.entries() == want
+        got = {
+            r["file_path"]: {k: bytes(v) for k, v in (r["ranges"] or {}).items()}
+            for r in t.inspect_files().select("file_path", "ranges").collect()
+        }
+        assert got == {e.file_path: e.ranges for e in want}
+
+        phashes = sorted(r[0] for r in t.scan(columns=["phash"]).collect())
+        lo, hi = phashes[len(phashes) // 4], phashes[len(phashes) // 2]
+        pred = [("phash", ">=", lo), ("phash", "<=", hi)]
+        assert t.scan(predicates=pred).count() == sum(
+            lo <= p <= hi for p in phashes
+        )
+
+        out = export_iceberg(t, os.path.join(tmp_table_dir, "exp"))
+        assert out["data_files"] == len(want)
+        imp = import_iceberg(
+            spark, out["metadata_json"], os.path.join(tmp_table_dir, "imp")
+        )
+        assert row_sets_equal(
+            t.scan().select("image_id", "phash"),
+            imp.scan().select("image_id", "phash"),
+        )
+
+        res = rewrite_manifests(t, target_entries=10, audit=True)
+        assert res["audited"] == len(want)
+        key = lambda e: e.file_path  # noqa: E731
+        assert sorted(t.entries(), key=key) == sorted(want, key=key)
 
 
 class TestExpireAndOrphans:

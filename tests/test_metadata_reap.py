@@ -240,3 +240,34 @@ def test_expire_with_log_bounds_the_log_metadata(spark, tmp_table_dir):
     assert log.done_chunk_ids("job") == want
     assert MaintenanceLog(spark, log.root).done_chunk_ids("job") == want
     assert log.done_chunk_ids("exp") == {"expire-None"}  # t has no snapshot
+
+
+def test_expire_with_log_folds_the_log(spark, tmp_table_dir):
+    """`run_expire(log=…)` folds the log's one-file-per-append data and
+    its own lineage row into one data file under one manifest before
+    expiring it: after 100 logged chunks the log holds one of each, on
+    disk too, and the same rows plus the expiry's."""
+    t = Table.create(
+        spark, os.path.join(tmp_table_dir, "t"),
+        StructType([StructField("k", StringType(), True)]),
+    )
+    log = MaintenanceLog(spark, os.path.join(tmp_table_dir, "log"))
+    for i in range(100):
+        log.log_done("job", "compact", {"chunk_id": f"c{i}"})
+    cols = ["job_id", "op", "chunk_id", "status", "finished_at"]
+    before = sorted(tuple(r) for r in log.metrics_df().select(*cols).collect())
+    assert len(log.table.entries()) == len(log.table.snapshot()["manifests"]) == 100
+    run_expire(t, grace_seconds=0.0, log=log, job_id="exp")
+
+    def files(sub):
+        return [f for _, _, fs in os.walk(os.path.join(log.root, sub)) for f in fs]
+
+    assert len(log.table.entries()) == len(log.table.snapshot()["manifests"]) == 1
+    assert len(files("data")) == len(files(os.path.join("metadata", "manifests"))) == 1
+    after = sorted(tuple(r) for r in log.metrics_df().select(*cols).collect())
+    assert [r for r in after if r[0] != "exp"] == before
+    assert [r[:4] for r in after if r[0] == "exp"] == [
+        ("exp", "expire", "expire-None", "done")
+    ]
+    assert len(log.table.snapshots()) == 1
+    assert log.fold() == 0  # already one file

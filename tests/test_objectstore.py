@@ -23,10 +23,12 @@ from olake_spark import datagen, sync
 from olake_spark.checkpoint import MaintenanceLog
 from olake_spark.icelite import (FakeObjectStoreFileIO, LocalFileIO,
                                  PartitionField, PartitionSpec, Table)
-from olake_spark.icelite.table import DATA, CommitConflict
+from olake_spark.icelite.table import (DATA, EQ_DELETES, POS_DELETES,
+                                       CommitConflict)
 from olake_spark.operators import compact
 from olake_spark.operators.cluster import run_cluster_rewrite
-from olake_spark.operators.compact import (rewrite_position_deletes,
+from olake_spark.operators.compact import (purge_dead_deletes,
+                                           rewrite_position_deletes,
                                            run_compaction)
 from olake_spark.operators.expire import run_expire
 from olake_spark.operators.merge import merge_into
@@ -546,3 +548,97 @@ class TestFaultAfterWrite:
         got = t.remove_orphan_files(grace_seconds=0)
         assert "data/999999-deadbeef.parquet" in got
         assert t.scan().count() == N
+
+
+def _with_delete_debt(spark, root, io):
+    """A fragmented table with both delete kinds over every data file: an
+    equality delete on every 5th id, position deletes on every 7th."""
+    t = _mk_table(spark, root, io)
+    t.row_delta(None, spark.createDataFrame(
+        [(f"img-{i:012d}",) for i in range(0, N, 5)], ["image_id"]
+    ))
+    t.delete_where("cast(substring(image_id, 5, 12) as bigint) % 7 = 0")
+    assert {e.content for e in t.entries()} == {DATA, EQ_DELETES, POS_DELETES}
+    return t
+
+
+def delete_files(t) -> set[str]:
+    return {e.file_path for e in t.entries() if e.content != DATA}
+
+
+@pytest.mark.parametrize("io_cls", [LocalFileIO, FakeObjectStoreFileIO])
+class TestCompactionDropsDeadDeletes:
+    """A compaction's last group commit drops the delete files its result
+    leaves dead: no separate purge snapshot."""
+
+    def test_one_snapshot_per_group(self, spark, tmp_table_dir, io_cls):
+        t = _with_delete_debt(spark, os.path.join(tmp_table_dir, "dd"), io_cls())
+        expected = t.scan().select(*COLS).localCheckpoint()
+        dels = delete_files(t)
+        n_bins = len(compact.plan_compaction(t, TARGET, fill_ratio=1.0))
+        n_snaps = len(t.snapshots())
+        res = run_compaction(t, "dd-c", fill_ratio=1.0, target_bytes=TARGET)
+        new = t.snapshots()[n_snaps:]
+        assert [s["operation"] for s in new] == ["compact"] * -(
+            -n_bins // compact.COMMIT_GROUP
+        )
+        assert res["delete_files_purged"] == len(dels)
+        assert new[-1]["summary"]["purged-delete-files"] == len(dels)
+        assert delete_files(t) == set()
+        assert row_sets_equal(expected, t.scan().select(*COLS))
+
+    def test_only_the_last_group_drops_deletes(self, spark, tmp_table_dir,
+                                               monkeypatch, io_cls):
+        """Killed after its first group, the run leaves every delete file
+        live and the row set exact; the resume's last commit drops them."""
+        monkeypatch.setattr(compact, "COMMIT_GROUP", 1)
+        t = _with_delete_debt(spark, os.path.join(tmp_table_dir, "dk"), io_cls())
+        expected = t.scan().select(*COLS).localCheckpoint()
+        dels = delete_files(t)
+        assert len(compact.plan_compaction(t, TARGET, fill_ratio=1.0)) >= 2
+        rewrite_files, calls = t.rewrite_files, []
+
+        def crash_at_second_commit(*a, **kw):
+            calls.append(1)
+            if len(calls) == 2:
+                raise OSError("injected crash at the second group's commit")
+            return rewrite_files(*a, **kw)
+
+        with monkeypatch.context() as m:
+            m.setattr(t, "rewrite_files", crash_at_second_commit)
+            with pytest.raises(OSError, match="injected crash"):
+                run_compaction(t, "dk-c", fill_ratio=1.0, target_bytes=TARGET)
+        t.refresh()
+        assert t.snapshot()["summary"]["bins-left"] >= 1
+        assert delete_files(t) == dels
+        assert row_sets_equal(expected, t.scan().select(*COLS))
+
+        n_snaps = len(t.snapshots())
+        res = run_compaction(t, "dk-c", fill_ratio=1.0, target_bytes=TARGET)
+        assert res["delete_files_purged"] == len(dels)
+        assert {s["operation"] for s in t.snapshots()[n_snaps:]} == {"compact"}
+        assert delete_files(t) == set()
+        assert row_sets_equal(expected, t.scan().select(*COLS))
+
+    def test_scoped_compaction_keeps_live_deletes(self, spark, tmp_table_dir,
+                                                  io_cls):
+        """A predicate-scoped run leaves burdened files outside its scope:
+        the equality delete still applies to them and stays, as do the
+        position deletes that mark their rows."""
+        t = _with_delete_debt(spark, os.path.join(tmp_table_dir, "ds"), io_cls())
+        expected = t.scan().select(*COLS).localCheckpoint()
+        eq = {e.file_path for e in t.entries() if e.content == EQ_DELETES}
+        scope = [("image_id", "<", f"img-{N // 2:012d}")]
+        outside = {
+            e.file_path for e in data_files(t)
+            if e.mins["image_id"] >= f"img-{N // 2:012d}"
+        }
+        assert outside
+        res = run_compaction(t, "ds-c", fill_ratio=1.0, target_bytes=TARGET,
+                             predicates=scope)
+        assert res["bins_executed"] > 0
+        assert outside <= {e.file_path for e in data_files(t)}
+        assert eq <= delete_files(t)
+        assert any(e.content == POS_DELETES for e in t.entries())
+        assert purge_dead_deletes(t) == 0  # nothing dead was left behind
+        assert row_sets_equal(expected, t.scan().select(*COLS))

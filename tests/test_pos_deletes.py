@@ -6,7 +6,7 @@ also defines positional deletes (content=1, rows of (file_path, pos));
 `Table.delete_where` is the Spark-first rendition — row identity from the
 parquet reader's hidden `_metadata.file_path` / `_metadata.row_index`
 columns, marks applied as an anti-join at scan time, folded in physically
-by the next compaction and reaped by purge_dead_deletes.
+by the next compaction, whose commit drops the dead delete files.
 """
 
 import os
@@ -112,8 +112,8 @@ class TestPosDeleteMaintenance:
         t.delete_where(f"{NUM} % 4 = 1")
         survivors = _ids(t)
         res = run_compaction(t, "job-posdel", target_bytes=1 << 30)
-        # compaction folds the marks into the rewritten files and its final
-        # purge pass reaps the now-dead positional-delete file
+        # compaction folds the marks into the rewritten files and its commit
+        # drops the now-dead positional-delete file
         assert res["delete_files_purged"] >= 1
         assert not any(e.content == POS_DELETES for e in t.entries())
         assert _ids(t) == survivors
@@ -380,6 +380,31 @@ class TestRewritePositionDeletes:
         res = rewrite_position_deletes(t)
         assert res["rewritten_files"] == 2
         assert _ids(t) == {i for i in live_before if i % 5 and i % 7}
+
+    def test_commit_drops_dead_equality_deletes(self, spark, images_table):
+        """An equality delete older than every live data file applies to
+        nothing: the consolidation commit drops it too, in one snapshot."""
+        from olake_spark.operators.compact import rewrite_position_deletes
+
+        t = images_table
+        t.row_delta(None, spark.createDataFrame(
+            [(f"img-{i:012d}",) for i in range(0, N, 2)], ["image_id"]
+        ))
+        # replaces every data file; the equality delete stays in place
+        t.overwrite_partitions(datagen.gen_images_df(spark, N))
+        t.delete_where(f"{NUM} % 3 = 0")
+        t.delete_where(f"{NUM} % 5 = 0")
+        n_eq = len([e for e in t.entries() if e.content == EQ_DELETES])
+        n_pos = len([e for e in t.entries() if e.content == POS_DELETES])
+        assert n_eq
+        expected = _ids(t)
+        n_snaps = len(t.snapshots())
+        res = rewrite_position_deletes(t)
+        assert res["rewritten_files"] == n_pos
+        assert res["dead_deletes_purged"] == n_eq
+        assert len(t.snapshots()) == n_snaps + 1
+        assert not any(e.content == EQ_DELETES for e in t.entries())
+        assert _ids(t) == expected
 
     def test_noop_with_single_delete_file(self, images_table):
         from olake_spark.operators.compact import rewrite_position_deletes
